@@ -16,18 +16,20 @@ validation is plan-based, not substring-based.
 from __future__ import annotations
 
 import hashlib
+import threading
 import time
-from collections import OrderedDict
-from dataclasses import dataclass, field
+from collections import OrderedDict, deque
+from dataclasses import astuple, dataclass, field
 from typing import Any
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from .functions.serialization import serialize_rows
+from .plans import star_planner
 from .plans.planner import Planner
-from .plans.validator import SqlValidationError, validate_select
+from .plans.validator import validate_select
 from .sources.catalog import inspect_table
+from .sources.connectors import append_query_log
 
 #: Reference cache policy (datafabric/settings.py:93-103, core/views.py:26-42).
 CACHE_TTL_SECONDS = 300
@@ -42,10 +44,15 @@ CACHE_MAX_ENTRIES = 1000
 #: core/ai_query_generator.py:110).
 MAX_RESULT_ROWS = 10_000
 
+#: In-memory query-log bound: a long-lived service keeps the newest entries;
+#: the durable record is the parquet sink.
+QUERY_LOG_MAX_ENTRIES = 1000
+
 
 @dataclass
 class QueryLogEntry:
-    """Schema mirror of the reference's query_logs sink (core/models.py:58-72)."""
+    """Schema mirror of the reference's query_logs sink (core/models.py:58-72);
+    fields before ``timestamp`` are in ``QUERY_LOG_SCHEMA`` order."""
 
     original_query: str
     generated_sql: str
@@ -59,12 +66,14 @@ class QueryLogEntry:
 
 class TTLCache:
     """md5-keyed, TTL'd, success-only result cache with LRU-ish culling —
-    the LocMemCache semantics the reference configures (MAX_ENTRIES=1000)."""
+    the LocMemCache semantics the reference configures (MAX_ENTRIES=1000).
+    Locked: ``api.serve`` runs requests on concurrent threads."""
 
     def __init__(self, ttl: float = CACHE_TTL_SECONDS, max_entries: int = CACHE_MAX_ENTRIES):
         self.ttl = ttl
         self.max_entries = max_entries
         self._store: OrderedDict[str, tuple[float, Any]] = OrderedDict()
+        self._lock = threading.Lock()
 
     @staticmethod
     def key_for(query: str) -> str:
@@ -72,25 +81,27 @@ class TTLCache:
 
     def get(self, key: str, now: float | None = None) -> Any | None:
         now = time.time() if now is None else now
-        hit = self._store.get(key)
-        if hit is None:
-            return None
-        expires, value = hit
-        if now >= expires:
-            del self._store[key]
-            return None
-        self._store.move_to_end(key)
-        return value
+        with self._lock:
+            hit = self._store.get(key)
+            if hit is None:
+                return None
+            expires, value = hit
+            if now >= expires:
+                del self._store[key]
+                return None
+            self._store.move_to_end(key)
+            return value
 
     def set(self, key: str, value: Any, now: float | None = None) -> None:
         now = time.time() if now is None else now
-        if len(self._store) >= self.max_entries:
-            # Cull a third, oldest-first (CULL_FREQUENCY=3 semantics).
-            for _ in range(max(1, self.max_entries // 3)):
-                if not self._store:
-                    break
-                self._store.popitem(last=False)
-        self._store[key] = (now + self.ttl, value)
+        with self._lock:
+            if len(self._store) >= self.max_entries:
+                # Cull a third, oldest-first (CULL_FREQUENCY=3 semantics).
+                for _ in range(max(1, self.max_entries // 3)):
+                    if not self._store:
+                        break
+                    self._store.popitem(last=False)
+            self._store[key] = (now + self.ttl, value)
 
 
 class DataFabricEngine:
@@ -107,7 +118,6 @@ class DataFabricEngine:
         default_table: str = "employees",
         llm_provider=None,
         log_sink_path: str | None = None,
-        use_star_rules: bool = True,
         max_result_rows: int = MAX_RESULT_ROWS,
     ):
         self.spark = spark
@@ -128,13 +138,8 @@ class DataFabricEngine:
         self.planner = Planner(table=default_table, llm_provider=llm_provider,
                                schema_text=self._schema_text(default_table))
         self.cache = TTLCache()
-        self.query_log: list[QueryLogEntry] = []
+        self.query_log: deque[QueryLogEntry] = deque(maxlen=QUERY_LOG_MAX_ENTRIES)
         self.log_sink_path = log_sink_path
-        #: north-star expansion: try the multi-table star-schema rule set
-        #: before the single-table cascade (plans/star_planner.py). On by
-        #: default — inert unless the star tables are in the allowlist, and
-        #: employee questions always fall through to the reference cascade.
-        self.use_star_rules = use_star_rules
         self.max_result_rows = max_result_rows
 
     # -- schema context (replaces per-request introspection, SURVEY 7.2) ----
@@ -159,83 +164,18 @@ class DataFabricEngine:
         if cached is not None:
             out = dict(cached)
             out["cached"] = True
-            self._log(user_query, out.get("sql_query") or "", True, None, 0.0,
+            self._log(user_query, out.get("sql_query"), True, None, 0.0,
                       out.get("row_count", 0), cached=True)
             return out
 
         start = time.time()
         sql_query: str | None = None
         try:
-            # Precedence mirrors the reference lifecycle (:379-393): the
-            # configured LLM path first, then deterministic rules — star
-            # rules (multi-table, allowlist-gated) ahead of the
-            # single-table cascade, which always answers.
-            planned = self.planner.plan_llm(user_query)
-            if planned is None and self.use_star_rules:
-                from .plans.star_planner import plan_star
-
-                star = plan_star(user_query)
-                if star is not None and not (set(star.tables) - self.tables):
-                    planned = star
-            if planned is None:
-                planned = self.planner.plan_cascade(user_query)
+            planned = self._plan(user_query)
             sql_query = planned.sql
-            if getattr(planned, "operator", None):
-                # Operator-routed star plan: the Spark-side answer is a
-                # library operator (LSH near-dup, ANN — algorithms SQL
-                # cannot express scalably); planned.sql holds the
-                # question's reference SQL semantics, reported for
-                # transparency (and run differentially as the oracle by
-                # the driver gate). SQL validation does not apply — no
-                # SQL executes; the operator reads only the plan's
-                # allowlisted tables, which the gate above checked.
-                from .operators.nl import run_nl_operator
-
-                df = run_nl_operator(
-                    self.spark,
-                    {n: self.spark.table(n) for n in planned.tables},
-                    planned.operator,
-                    planned.operator_args,
-                )
-                exec_result = self._execute_df(df)
-            else:
-                validated = validate_select(self.spark, sql_query, self.tables)
-                exec_result = self._execute(validated.sql)
-            response: dict[str, Any] = {
-                "success": exec_result["success"],
-                "original_query": user_query,
-                "sql_query": sql_query,
-                "data": exec_result["data"],
-                "columns": exec_result["columns"],
-                "row_count": exec_result["row_count"],
-                "truncated": exec_result.get("truncated", False),
-            }
-            if not exec_result["success"]:
-                response["error"] = exec_result.get("error", "Unknown error")
-            total = time.time() - start
-            self._log(user_query, sql_query, exec_result["success"],
-                      exec_result.get("error"), total, exec_result["row_count"])
-            if response["success"]:
-                self.cache.set(cache_key, response)
-            response = dict(response)
-            response["cached"] = False
-            return response
-        except SqlValidationError as exc:
-            total = time.time() - start
-            self._log(user_query, sql_query or "", False, str(exc), total, 0)
-            return {
-                "success": False,
-                "error": f"Query processing failed: {exc}",
-                "original_query": user_query,
-                "sql_query": sql_query,
-                "data": [],
-                "columns": [],
-                "row_count": 0,
-                "cached": False,
-            }
+            columns, data, truncated = self._execute_df(self._dataframe(planned))
         except Exception as exc:  # mirrors the catch-all envelope :432-445
-            total = time.time() - start
-            self._log(user_query, sql_query or "", False, str(exc), total, 0)
+            self._log(user_query, sql_query, False, str(exc), time.time() - start, 0)
             return {
                 "success": False,
                 "error": f"Query processing failed: {exc}",
@@ -246,56 +186,65 @@ class DataFabricEngine:
                 "row_count": 0,
                 "cached": False,
             }
+        response: dict[str, Any] = {
+            "success": True,
+            "original_query": user_query,
+            "sql_query": sql_query,
+            "data": data,
+            "columns": columns,
+            "row_count": len(data),
+            "truncated": truncated,
+        }
+        self._log(user_query, sql_query, True, None, time.time() - start, len(data))
+        self.cache.set(cache_key, response)
+        return {**response, "cached": False}
 
-    def _execute(self, sql: str) -> dict[str, Any]:
-        """Execute validated SQL via Catalyst; serialize with the compat
-        coercions. The collect is HARD-bounded at ``max_result_rows`` via
-        ``limit(cap + 1)`` — the deterministic cascade emits its own
-        LIMITs, but the LLM path runs validated arbitrary SELECTs, and an
-        unbounded collect there OOMs the driver at scale. One sentinel row
-        past the cap distinguishes "exactly cap rows" from truncation,
-        reported via the ``truncated`` flag."""
-        try:
-            return self._execute_df(self.spark.sql(sql))
-        except Exception as exc:
-            return {
-                "success": False,
-                "error": str(exc),
-                "data": [],
-                "columns": [],
-                "row_count": 0,
-                "execution_time": 0,
-            }
+    def _plan(self, user_query: str):
+        """Precedence mirrors the reference lifecycle (:379-393): the
+        configured LLM path first, then deterministic rules — star rules
+        (multi-table, inert unless all their tables are allowlisted) ahead
+        of the single-table cascade, which always answers."""
+        planned = self.planner.plan_llm(user_query)
+        if planned is None:
+            planned = star_planner.plan_star(user_query)
+            if planned is not None and set(planned.tables) - self.tables:
+                planned = None
+        if planned is None:
+            planned = self.planner.plan_cascade(user_query)
+        return planned
 
-    def _execute_df(self, df) -> dict[str, Any]:
-        """Collect + serialize a planned DataFrame under the result-row cap
-        (shared by the SQL path and the operator-routed NL path)."""
-        try:
-            start = time.time()
-            cap = self.max_result_rows
-            columns = df.columns
-            rows = [tuple(r) for r in df.limit(cap + 1).collect()]
-            truncated = len(rows) > cap
-            if truncated:
-                rows = rows[:cap]
-            data = serialize_rows(columns, rows)
-            return {
-                "success": True,
-                "data": data,
-                "columns": columns,
-                "row_count": len(data),
-                "truncated": truncated,
-                "execution_time": time.time() - start,
-            }
-        except Exception as exc:
-            return {
-                "success": False,
-                "error": str(exc),
-                "data": [],
-                "columns": [],
-                "row_count": 0,
-                "execution_time": 0,
-            }
+    def _dataframe(self, planned):
+        """The planned query as a DataFrame: validated SQL through Catalyst,
+        or a library operator for operator-routed star plans."""
+        if getattr(planned, "operator", None):
+            # LSH near-dup, ANN: algorithms SQL cannot express scalably.
+            # planned.sql holds the question's reference SQL semantics,
+            # reported for transparency (and run as the differential
+            # oracle by the parity suite). SQL validation does not apply —
+            # no SQL executes; the operator reads only the plan's tables,
+            # which the allowlist gate in _plan checked.
+            from .operators.nl import run_nl_operator
+
+            return run_nl_operator(
+                self.spark,
+                {n: self.spark.table(n) for n in planned.tables},
+                planned.operator,
+                planned.operator_args,
+            )
+        validated = validate_select(self.spark, planned.sql, self.tables)
+        return self.spark.sql(validated.sql)
+
+    def _execute_df(self, df) -> tuple[list[str], list[dict], bool]:
+        """Collect + serialize under a HARD cap of ``max_result_rows``: the
+        deterministic cascade emits its own LIMITs, but the LLM path runs
+        validated arbitrary SELECTs, and an unbounded collect there runs
+        out of memory at scale. One sentinel row past the cap distinguishes
+        "exactly cap rows" from truncation. Returns ``(columns, rows,
+        truncated)``; failures raise."""
+        cap = self.max_result_rows
+        columns = df.columns
+        rows = [tuple(r) for r in df.limit(cap + 1).collect()]
+        return columns, serialize_rows(columns, rows[:cap]), len(rows) > cap
 
     # -- logging sink (core/ai_query_generator.py:364-377) ------------------
     def _log(self, q, sql, success, err, secs, n, cached=False) -> None:
@@ -306,16 +255,8 @@ class DataFabricEngine:
         self.query_log.append(entry)
         if self.log_sink_path:
             try:
-                row = [(entry.original_query, entry.generated_sql, entry.success,
-                        entry.error_message, entry.execution_time,
-                        entry.result_count, entry.cached)]
-                (self.spark.createDataFrame(
-                    row,
-                    "original_query string, generated_sql string, success boolean, "
-                    "error_message string, execution_time double, result_count int, "
-                    "cached boolean",
-                ).withColumn("timestamp", F.current_timestamp())
-                 .write.mode("append").parquet(self.log_sink_path))
+                # the sink stamps its own timestamp column
+                append_query_log(self.spark, self.log_sink_path, [astuple(entry)[:-1]])
             except Exception:
                 pass  # log failures are swallowed, like the reference :376-377
 
@@ -361,27 +302,8 @@ class DataFabricEngine:
         if not user_query:
             return {"success": False, "error": "Query cannot be empty"}
         try:
-            planned = self.planner.plan_llm(user_query)
-            if planned is None and self.use_star_rules:
-                from .plans.star_planner import plan_star
-
-                star = plan_star(user_query)
-                if star is not None and not (set(star.tables) - self.tables):
-                    planned = star
-            if planned is None:
-                planned = self.planner.plan_cascade(user_query)
-            if getattr(planned, "operator", None):
-                from .operators.nl import run_nl_operator
-
-                df = run_nl_operator(
-                    self.spark,
-                    {n: self.spark.table(n) for n in planned.tables},
-                    planned.operator,
-                    planned.operator_args,
-                )
-            else:
-                validated = validate_select(self.spark, planned.sql, self.tables)
-                df = self.spark.sql(validated.sql)
+            planned = self._plan(user_query)
+            df = self._dataframe(planned)
             physical = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )

@@ -81,8 +81,7 @@ def build_system_prompt(schema_text: str, table: str = "employees") -> str:
 @dataclass
 class OpenAICompatibleProvider:
     """``LLMProvider`` implementation for any OpenAI-compatible
-    ``/chat/completions`` endpoint. Plug into ``Planner(llm_provider=...)``
-    or ``DataFabricEngine(llm_provider=...)``.
+    ``/chat/completions`` endpoint. Plug into ``DataFabricEngine(llm_provider=...)``.
     """
 
     api_key: str

@@ -210,8 +210,9 @@ LLMProvider = Callable[[str, str], "str | None"]
 
 @dataclass
 class Planner:
-    """NL->SQL planning facade: optional LLM provider first, deterministic
-    cascade as the always-available fallback (mirrors ``:379-393``)."""
+    """The single-table planning paths: the optional LLM provider and the
+    deterministic cascade. ``DataFabricEngine._plan`` orders them (mirrors
+    ``:379-393``), with the star rules in between."""
 
     table: str = "employees"
     llm_provider: LLMProvider | None = None
@@ -236,6 +237,3 @@ class Planner:
     def plan_cascade(self, user_query: str) -> PlannedQuery:
         """The deterministic N3 cascade alone."""
         return plan(user_query, table=self.table)
-
-    def plan(self, user_query: str) -> PlannedQuery:
-        return self.plan_llm(user_query) or self.plan_cascade(user_query)

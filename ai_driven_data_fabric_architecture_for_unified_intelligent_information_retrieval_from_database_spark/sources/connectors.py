@@ -11,7 +11,8 @@ cursor; its only sink is the ``query_logs`` append
   config-construction only, exercised by tests for option wiring.
 - File formats (csv/json/orc/parquet) come via :func:`read_table`, always
   schema-explicit (schema inference is a full extra pass at 100 TB).
-- :func:`append_query_log` is the durable form of the engine's log sink.
+- :func:`append_query_log` is the engine's one query-log writer (the
+  durable form of its in-memory log), serialized across threads.
 
 Lakehouse formats (Delta/Iceberg/Hudi) need jars absent from this image;
 :func:`read_table` raises a clear error for them rather than guessing.
@@ -20,6 +21,7 @@ Lakehouse formats (Delta/Iceberg/Hudi) need jars absent from this image;
 from __future__ import annotations
 
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -338,13 +340,19 @@ QUERY_LOG_SCHEMA = (
 )
 
 
+#: Concurrent parquet appends to one path abort each other's write tasks
+#: (the losers' rows are lost), so appends run one at a time.
+_QUERY_LOG_LOCK = threading.Lock()
+
+
 def append_query_log(spark: SparkSession, path: str, entries: list[tuple]) -> None:
     """Append log rows (QUERY_LOG_SCHEMA order, without timestamp) to a
     parquet sink with an auto ``timestamp`` column — the reference's
     append-only QueryLog semantics, durable."""
-    (
-        spark.createDataFrame(entries, QUERY_LOG_SCHEMA)
-        .withColumn("timestamp", F.current_timestamp())
-        .write.mode("append")
-        .parquet(path)
-    )
+    with _QUERY_LOG_LOCK:
+        (
+            spark.createDataFrame(entries, QUERY_LOG_SCHEMA)
+            .withColumn("timestamp", F.current_timestamp())
+            .write.mode("append")
+            .parquet(path)
+        )

@@ -12,7 +12,8 @@ write decides every later read:
   by join key at write time. Two tables bucketed the same way join with
   NO exchange on either side — the shuffle was paid once at write time and
   amortizes over every subsequent join.
-- **append log** (`append_log`): the reference's query-log sink shape.
+
+The query-log append itself lives in ``connectors.append_query_log``.
 """
 
 from __future__ import annotations
@@ -137,13 +138,6 @@ def _count_bucket_files(spark: SparkSession, table: str) -> int:
             stacklevel=2,
         )
         return 0
-
-
-def append_log(df: DataFrame, path: str) -> None:
-    """Append-only sink (the reference's query_logs shape,
-    core/models.py:58-72): immutable adds, no rewrites — safe for
-    concurrent writers and incremental readers."""
-    df.write.mode("append").parquet(path)
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:

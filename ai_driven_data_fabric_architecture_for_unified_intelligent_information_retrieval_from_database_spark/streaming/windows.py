@@ -228,8 +228,8 @@ def run_foreach_batch_append(
     equally JDBC/Delta/bucketed tables) becomes a streaming sink with
     batch-id-based replay protection left to the writer's idempotence.
 
-    This is the streaming twin of sources/sinks.py::append_log and the
-    scaled-up form of the reference's query-log INSERT
+    This is the streaming twin of sources/connectors.py::append_query_log
+    and the scaled-up form of the reference's query-log INSERT
     (core/ai_query_generator.py:364-377).
     """
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import urllib.request
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -127,6 +128,35 @@ def test_engine_log_sink_path(spark, tmp_path):
     logs = spark.read.parquet(path)
     assert logs.count() == 1
     assert logs.collect()[0].success is True
+
+
+def test_concurrent_requests_keep_every_log_row(spark, tmp_path):
+    """ThreadingHTTPServer runs requests concurrently, and concurrent
+    parquet appends to one sink path abort each other's write tasks: the
+    log writer serializes its appends, so every request leaves its row."""
+    register_employees(spark, n=200)
+    path = str(tmp_path / "concurrent_logs")
+    eng = DataFabricEngine(spark, tables={"employees"}, llm_provider=False,
+                           log_sink_path=path)
+    srv = serve(eng)
+
+    def client(c):
+        return [
+            _post(srv, "/api/query/", {
+                "query": f"Show me employees with salary greater than {40000 + 100 * c + i}"
+            })[0]
+            for i in range(12)
+        ]
+
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            statuses = [s for batch in pool.map(client, range(4)) for s in batch]
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert statuses == [200] * 48
+    assert len(eng.query_log) == 48
+    assert spark.read.parquet(path).count() == 48
 
 
 def test_salted_group_count_matches_plain(spark):

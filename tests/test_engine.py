@@ -4,9 +4,13 @@ error envelopes, introspection."""
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 import pytest
 
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.engine import (
+    QUERY_LOG_MAX_ENTRIES,
     DataFabricEngine,
     TTLCache,
 )
@@ -15,7 +19,9 @@ from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retr
 )
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.catalog import (
     register_employees,
+    register_views,
 )
+from conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -51,6 +57,53 @@ def test_empty_query_rejected(engine):
     assert "empty" in out["error"].lower()
 
 
+SUCCESS_KEYS = {"success", "original_query", "sql_query", "data", "columns",
+                "row_count", "truncated", "cached"}
+FAILURE_KEYS = {"success", "error", "original_query", "sql_query", "data",
+                "columns", "row_count", "cached"}
+#: path -> SQL the stub LLM emits (None: the deterministic planners answer)
+ENVELOPE_LLM_SQL = {
+    "sql_success": None,
+    "cache_hit": None,
+    "validation_failure": "DROP TABLE employees",
+    "analysis_failure": "SELECT no_such_col FROM employees",
+    "operator_route": None,
+}
+
+
+@pytest.mark.parametrize("path", list(ENVELOPE_LLM_SQL))
+def test_response_envelope_per_path(spark, path):
+    """One response shape per outcome, whichever path produced it: every
+    failure — validation, analysis, execution — is the reference's
+    catch-all envelope (core/ai_query_generator.py:432-445)."""
+    register_employees(spark, n=50)
+    q = "How many employees work in the IT department?"
+    tables = {"employees"}
+    if path == "operator_route":
+        register_views(spark, SF_SMOKE)
+        q = "Show the 3 documents most similar to document 0"
+        tables = {"documents", "embeddings"}
+    sql = ENVELOPE_LLM_SQL[path]
+    eng = DataFabricEngine(spark, tables=tables,
+                           llm_provider=(lambda _q, _s: sql) if sql else False)
+    out = eng.process(q)
+    if path == "cache_hit":
+        out = eng.process(q)
+    success = sql is None
+    assert set(out) == (SUCCESS_KEYS if success else FAILURE_KEYS), out
+    assert out["success"] is success
+    assert out["cached"] is (path == "cache_hit")
+    assert out["original_query"] == q and out["sql_query"]
+    if success:
+        assert out["row_count"] == len(out["data"]) > 0
+        assert out["truncated"] is False
+        assert all(set(r) == set(out["columns"]) for r in out["data"])
+    else:
+        assert out["error"].startswith("Query processing failed:")
+        assert out["data"] == [] and out["columns"] == [] and out["row_count"] == 0
+    assert eng.query_log[-1].success is success
+
+
 def test_error_envelope_on_bad_llm_sql(spark):
     register_employees(spark, n=50)
     bad_provider = lambda q, s: "DROP TABLE employees"
@@ -72,6 +125,15 @@ def test_query_log_appends(engine):
     assert entry.success is True
     assert entry.generated_sql.lower().startswith("select")
     assert entry.execution_time >= 0
+
+
+def test_query_log_is_bounded(engine):
+    """The in-memory log keeps the newest QUERY_LOG_MAX_ENTRIES entries
+    instead of growing with every request of a long-lived service."""
+    for _ in range(QUERY_LOG_MAX_ENTRIES + 5):
+        engine.process("Count of employees in each department")
+    assert len(engine.query_log) == QUERY_LOG_MAX_ENTRIES
+    assert engine.query_log[-1].cached is True
 
 
 def test_serializer_coercions():
@@ -100,6 +162,40 @@ def test_ttl_cache_culls_at_capacity():
     c.set("k9", 9, now=1001.0)  # triggers cull of oldest third
     assert c.get("k0", now=1002.0) is None
     assert c.get("k9", now=1002.0) == 9
+
+
+def test_ttl_cache_expired_get_is_thread_safe():
+    """Two threads expiring the same key at once: without the cache lock
+    both reach the delete, and the loser's KeyError escapes process() —
+    an HTTP 500 under ThreadingHTTPServer."""
+    c = TTLCache(ttl=10)
+    c.set("k", {"v": 1}, now=1000.0)
+    errors = []
+
+    def racing_get():
+        try:
+            c.get("k", now=1011.0)
+        except Exception as exc:
+            errors.append(exc)
+
+    racer = threading.Thread(target=racing_get)
+
+    class Interleaved(OrderedDict):
+        """Lets the racer run between the first get's lookup and delete."""
+
+        def get(self, key, default=None):
+            hit = super().get(key, default)
+            if racer.ident is None:  # first lookup only
+                racer.start()
+                racer.join(timeout=0.5)
+            return hit
+
+    c._store = Interleaved(c._store)
+    assert c.get("k", now=1011.0) is None
+    racer.join(timeout=5)
+    assert not racer.is_alive()
+    assert errors == []
+    assert c.get("k", now=1011.0) is None
 
 
 def test_metadata_endpoints(engine):

@@ -9,7 +9,6 @@ import pytest
 
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans.planner import (
     Intent,
-    Planner,
     plan,
 )
 
@@ -77,18 +76,28 @@ def test_table_override():
     assert "FROM staff" in p.sql
 
 
-def test_llm_provider_path_used_when_present():
+def _engine(spark, provider):
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.engine import (
+        DataFabricEngine,
+    )
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.catalog import (
+        register_employees,
+    )
+
+    register_employees(spark, n=50)
+    return DataFabricEngine(spark, tables={"employees"}, llm_provider=provider)
+
+
+def test_llm_provider_path_used_when_present(spark):
     provider = lambda q, schema: "SELECT name FROM employees LIMIT 5;"
-    pl = Planner(llm_provider=provider)
-    out = pl.plan("whatever question")
-    assert out.branch == "llm"
-    assert out.sql == "SELECT name FROM employees LIMIT 5"
+    out = _engine(spark, provider).explain("whatever question")
+    assert out["branch"] == "llm"
+    assert out["sql_query"] == "SELECT name FROM employees LIMIT 5"
 
 
-def test_llm_provider_falls_back_on_none():
-    pl = Planner(llm_provider=lambda q, s: None)
-    out = pl.plan("show all employees")
-    assert out.branch == "list_all"
+def test_llm_provider_falls_back_on_none(spark):
+    out = _engine(spark, lambda q, s: None).explain("show all employees")
+    assert out["branch"] == "list_all"
 
 
 def test_planner_sql_runs_on_spark(spark):

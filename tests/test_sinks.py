@@ -73,11 +73,3 @@ def test_bucketed_tables_join_without_exchange(spark, events_df, tmp_path_factor
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bk_users")
         spark.sql("DROP TABLE IF EXISTS bk_values")
-
-
-def test_append_log_accumulates(spark, events_df, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("log") / "qlog")
-    head = events_df.limit(5).select("event_id", "event_type")
-    sinks.append_log(head, path)
-    sinks.append_log(head, path)
-    assert spark.read.parquet(path).count() == 10

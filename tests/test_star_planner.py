@@ -58,9 +58,7 @@ def test_employee_questions_always_fall_through():
 
 def test_engine_star_mode_end_to_end(spark):
     register_views(spark, SF_SMOKE)
-    eng = DataFabricEngine(
-        spark, tables=set(STAR_TABLES), default_table="customer", use_star_rules=True
-    )
+    eng = DataFabricEngine(spark, tables=set(STAR_TABLES), default_table="customer")
     out = eng.process("What is the revenue by region?")
     assert out["success"] is True, out.get("error")
     assert out["columns"] == ["region", "revenue"]
@@ -71,9 +69,7 @@ def test_engine_star_mode_end_to_end(spark):
 
 def test_engine_star_mode_falls_back_to_default(spark):
     register_views(spark, SF_SMOKE)
-    eng = DataFabricEngine(
-        spark, tables=set(STAR_TABLES) | {"employees"}, use_star_rules=True
-    )
+    eng = DataFabricEngine(spark, tables=set(STAR_TABLES) | {"employees"})
     from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.catalog import (
         register_employees,
     )
@@ -91,7 +87,7 @@ def test_star_rule_blocked_when_tables_not_allowlisted(spark):
     )
 
     register_employees(spark, n=50)
-    eng = DataFabricEngine(spark, tables={"employees"}, use_star_rules=True)
+    eng = DataFabricEngine(spark, tables={"employees"})
     out = eng.process("What is the revenue by region?")
     # star rule needs lineitem/orders/... which are not allowlisted -> falls
     # through to the single-table cascade (default branch) on employees
@@ -187,7 +183,6 @@ def test_engine_operator_route_end_to_end(spark):
         spark,
         tables=set(STAR_TABLES) | {"documents", "embeddings"},
         default_table="customer",
-        use_star_rules=True,
     )
     out = eng.process("Show the 3 documents most similar to document 0")
     assert out["success"] is True, out.get("error")
@@ -211,6 +206,6 @@ def test_engine_operator_route_blocked_without_tables(spark):
     )
 
     register_employees(spark, n=50)
-    eng = DataFabricEngine(spark, tables={"employees"}, use_star_rules=True)
+    eng = DataFabricEngine(spark, tables={"employees"})
     out = eng.process("Find near-duplicate document pairs")
     assert "FROM employees" in out["sql_query"]
