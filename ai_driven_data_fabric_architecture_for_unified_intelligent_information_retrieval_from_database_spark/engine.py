@@ -10,7 +10,10 @@ row_count, cached}`` (plus ``error`` on failure).
 Deviations (SURVEY.md 7.2): schema introspection is cached catalog metadata
 instead of per-request ``information_schema`` queries; BOTH planner paths are
 validated (the reference trusts its fallback unvalidated, ``:391-407``);
-validation is plan-based, not substring-based.
+validation is plan-based, not substring-based; the query-log sink is written
+in batches off the request thread (``sources/connectors.py``), so a crash
+without :meth:`DataFabricEngine.close` loses at most ~``LOG_FLUSH_SECONDS`` of
+log rows.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ import threading
 import time
 from collections import OrderedDict, deque
 from dataclasses import astuple, dataclass, field
+from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -29,7 +33,7 @@ from .plans import star_planner
 from .plans.planner import Planner
 from .plans.validator import validate_select
 from .sources.catalog import inspect_table
-from .sources.connectors import append_query_log
+from .sources.connectors import QueryLogBuffer
 
 #: Reference cache policy (datafabric/settings.py:93-103, core/views.py:26-42).
 CACHE_TTL_SECONDS = 300
@@ -52,7 +56,8 @@ QUERY_LOG_MAX_ENTRIES = 1000
 @dataclass
 class QueryLogEntry:
     """Schema mirror of the reference's query_logs sink (core/models.py:58-72);
-    fields before ``timestamp`` are in ``QUERY_LOG_SCHEMA`` order."""
+    fields are in ``QUERY_LOG_SCHEMA`` order. ``timestamp`` is the request
+    time, so a batched flush keeps it."""
 
     original_query: str
     generated_sql: str
@@ -61,7 +66,7 @@ class QueryLogEntry:
     execution_time: float
     result_count: int
     cached: bool
-    timestamp: float = field(default_factory=time.time)
+    timestamp: datetime = field(default_factory=lambda: datetime.now(timezone.utc))
 
 
 class TTLCache:
@@ -140,6 +145,7 @@ class DataFabricEngine:
         self.cache = TTLCache()
         self.query_log: deque[QueryLogEntry] = deque(maxlen=QUERY_LOG_MAX_ENTRIES)
         self.log_sink_path = log_sink_path
+        self.log_buffer = QueryLogBuffer(spark, log_sink_path) if log_sink_path else None
         self.max_result_rows = max_result_rows
 
     # -- schema context (replaces per-request introspection, SURVEY 7.2) ----
@@ -253,12 +259,19 @@ class DataFabricEngine:
             error_message=err, execution_time=secs, result_count=n, cached=cached,
         )
         self.query_log.append(entry)
-        if self.log_sink_path:
-            try:
-                # the sink stamps its own timestamp column
-                append_query_log(self.spark, self.log_sink_path, [astuple(entry)[:-1]])
-            except Exception:
-                pass  # log failures are swallowed, like the reference :376-377
+        if self.log_buffer is not None:
+            self.log_buffer.add(astuple(entry))  # flushed off the request thread
+
+    def flush_log(self) -> None:
+        """Write the buffered log rows to the sink now, as one file."""
+        if self.log_buffer is not None:
+            self.log_buffer.flush()
+
+    def close(self) -> None:
+        """Drain the log buffer and stop its flusher. Idempotent, and safe
+        after ``spark.stop()``."""
+        if self.log_buffer is not None:
+            self.log_buffer.close()
 
     # -- metadata endpoints (core/views.py:65-121) ---------------------------
     def examples(self) -> dict[str, Any]:

@@ -12,7 +12,17 @@ cursor; its only sink is the ``query_logs`` append
 - File formats (csv/json/orc/parquet) come via :func:`read_table`, always
   schema-explicit (schema inference is a full extra pass at 100 TB).
 - :func:`append_query_log` is the engine's one query-log writer (the
-  durable form of its in-memory log), serialized across threads.
+  durable form of its in-memory log), serialized across threads. The
+  engine reaches it through :class:`QueryLogBuffer`: requests only append
+  a row in memory, and a background flusher writes the buffered rows as
+  one parquet file when ``LOG_FLUSH_ROWS`` are buffered or the oldest has
+  waited ``LOG_FLUSH_SECONDS``.
+
+  Deviation: the reference writes each row synchronously
+  (``QueryLog.objects.create``, ``core/ai_query_generator.py:367-375``).
+  Here a process that dies without ``DataFabricEngine.close()`` loses the
+  rows of its last flush interval, at most ~``LOG_FLUSH_SECONDS`` of them.
+  Each row keeps its request time in ``timestamp``, not its flush time.
 
 Lakehouse formats (Delta/Iceberg/Hudi) need jars absent from this image;
 :func:`read_table` raises a clear error for them rather than guessing.
@@ -20,14 +30,18 @@ Lakehouse formats (Delta/Iceberg/Hudi) need jars absent from this image;
 
 from __future__ import annotations
 
+import logging
+import math
 import re
 import threading
+import time
+from collections import deque
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _LAKEHOUSE = {"delta", "iceberg", "hudi"}
+_logger = logging.getLogger(__name__)
 
 
 def read_jdbc(
@@ -332,12 +346,20 @@ def inspect_jdbc_table(
 
 
 #: Schema of the query-log sink — mirror of the reference's query_logs table
-#: (core/models.py:58-72 / FIXTURES.md section 2).
+#: (core/models.py:58-72 / FIXTURES.md section 2). ``timestamp`` is the
+#: request time the engine stamped, not the time the row was flushed.
 QUERY_LOG_SCHEMA = (
     "original_query string, generated_sql string, success boolean, "
     "error_message string, execution_time double, result_count int, "
-    "cached boolean"
+    "cached boolean, timestamp timestamp"
 )
+
+#: A :class:`QueryLogBuffer` flushes when it holds this many rows, or when its
+#: oldest row has waited this many seconds, whichever comes first.
+LOG_FLUSH_ROWS = 256
+LOG_FLUSH_SECONDS = 1.0
+#: Rows a buffer keeps while its sink fails; past it the oldest are dropped.
+LOG_BUFFER_MAX_ROWS = 10_000
 
 
 #: Concurrent parquet appends to one path abort each other's write tasks
@@ -346,13 +368,114 @@ _QUERY_LOG_LOCK = threading.Lock()
 
 
 def append_query_log(spark: SparkSession, path: str, entries: list[tuple]) -> None:
-    """Append log rows (QUERY_LOG_SCHEMA order, without timestamp) to a
-    parquet sink with an auto ``timestamp`` column — the reference's
-    append-only QueryLog semantics, durable."""
+    """Append log rows (``QUERY_LOG_SCHEMA`` order, a non-empty list) to a
+    parquet sink as one file — the reference's append-only QueryLog
+    semantics, durable. A naive ``timestamp`` is read in the session time
+    zone; the engine stamps aware UTC times."""
+    import pyarrow as pa
+
+    # An Arrow table reaches the JVM directly; a list of tuples is unpickled
+    # by a Python worker per partition (a ~1 s write instead of ~0.15 s on a
+    # 4-core host), which stretches how late the last rows land.
+    names = [column.split()[0] for column in QUERY_LOG_SCHEMA.split(", ")]
+    table = pa.table([list(column) for column in zip(*entries)], names=names)
     with _QUERY_LOG_LOCK:
         (
-            spark.createDataFrame(entries, QUERY_LOG_SCHEMA)
-            .withColumn("timestamp", F.current_timestamp())
+            spark.createDataFrame(table, QUERY_LOG_SCHEMA)
+            .coalesce(1)
             .write.mode("append")
             .parquet(path)
         )
+
+
+class QueryLogBuffer:
+    """Bounded in-memory buffer in front of :func:`append_query_log`.
+
+    :meth:`add` runs on the request thread and starts no Spark job. A daemon
+    flusher, started on the first ``add``, writes the buffered rows as one
+    file per flush. A failed write is swallowed, like the reference's
+    (``core/ai_query_generator.py:376-377``), and logged once per run of
+    failures: its rows stay buffered for the next flush, at most
+    ``LOG_BUFFER_MAX_ROWS`` of them, and the oldest past that bound are
+    dropped and counted in :attr:`dropped`.
+    """
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark = spark
+        self.path = path
+        self.dropped = 0
+        self._rows: deque[tuple] = deque()
+        self._cond = threading.Condition()
+        self._flush_lock = threading.Lock()  # a flush returns after any in flight
+        self._flusher: threading.Thread | None = None
+        self._closed = False
+        self._failing = False
+        self._oldest = 0.0  # time.monotonic() of the oldest buffered row
+
+    def __len__(self) -> int:
+        return len(self._rows)
+
+    def add(self, row: tuple) -> None:
+        with self._cond:
+            if not self._rows:
+                self._oldest = time.monotonic()
+            self._rows.append(row)
+            self._trim()
+            if self._flusher is None and not self._closed:
+                self._flusher = threading.Thread(
+                    target=self._run, name="query-log-flusher", daemon=True
+                )
+                self._flusher.start()
+            self._cond.notify()
+
+    def _trim(self) -> None:
+        while len(self._rows) > LOG_BUFFER_MAX_ROWS:
+            self._rows.popleft()
+            self.dropped += 1
+
+    def flush(self) -> None:
+        """Write every buffered row now, as one file. If the write fails,
+        its rows are buffered again."""
+        with self._flush_lock:
+            with self._cond:
+                rows = list(self._rows)
+                self._rows.clear()
+            if not rows:
+                return
+            try:
+                append_query_log(self.spark, self.path, rows)
+            except Exception:
+                if not self._failing:
+                    _logger.warning("query-log write to %s failed; its rows stay buffered",
+                                    self.path, exc_info=True)
+                self._failing = True
+                with self._cond:
+                    self._rows.extendleft(reversed(rows))
+                    self._trim()
+            else:
+                self._failing = False
+
+    def _run(self) -> None:
+        while True:
+            with self._cond:
+                self._cond.wait_for(lambda: self._rows or self._closed)
+                if self._failing:  # retry a failed write a full interval later
+                    full, wait = math.inf, LOG_FLUSH_SECONDS
+                else:
+                    full = LOG_FLUSH_ROWS
+                    wait = self._oldest + LOG_FLUSH_SECONDS - time.monotonic()
+                self._cond.wait_for(
+                    lambda: self._closed or len(self._rows) >= full, max(wait, 0.0)
+                )
+                if self._closed:
+                    return
+            self.flush()
+
+    def close(self) -> None:
+        """Stop the flusher and write what is buffered. Idempotent; after
+        ``spark.stop()`` the final write fails and is swallowed. Rows
+        added after ``close`` are written only by :meth:`flush`."""
+        with self._cond:
+            self._closed = True
+            self._cond.notify_all()
+        self.flush()

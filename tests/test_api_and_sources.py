@@ -3,9 +3,16 @@ and skew-helper equivalence."""
 
 from __future__ import annotations
 
+import glob
+import itertools
 import json
+import os
+import sys
+import threading
+import time
 import urllib.request
 from concurrent.futures import ThreadPoolExecutor
+from datetime import datetime, timezone
 
 import pytest
 
@@ -14,6 +21,9 @@ from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retr
 )
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.api import (
     serve,
+)
+from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources import (
+    connectors,
 )
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.catalog import (
     register_employees,
@@ -109,12 +119,25 @@ def test_read_table_guards(spark, tmp_path):
     assert {tuple(r) for r in back.collect()} == {(1, "a"), (2, "b")}
 
 
+@pytest.fixture
+def held_flusher(monkeypatch):
+    """Keep the background log flusher from writing during the test, so the
+    test's own ``flush_log()`` is the only write to the sink."""
+    monkeypatch.setattr(connectors, "LOG_FLUSH_SECONDS", 3600.0)
+
+
+def _parquet_files(path):
+    return glob.glob(os.path.join(path, "*.parquet"))
+
+
 def test_query_log_parquet_sink(spark, tmp_path):
     path = str(tmp_path / "query_logs")
-    append_query_log(spark, path, [("q1", "SELECT 1", True, None, 0.1, 1, False)])
-    append_query_log(spark, path, [("q2", "SELECT 2", False, "boom", 0.2, 0, False)])
+    t = datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
+    append_query_log(spark, path, [("q1", "SELECT 1", True, None, 0.1, 1, False, t)])
+    append_query_log(spark, path, [("q2", "SELECT 2", False, "boom", 0.2, 0, False, t)])
     logs = spark.read.parquet(path)
     assert logs.count() == 2
+    assert len(_parquet_files(path)) == 2
     cols = set(logs.columns)
     assert {"original_query", "generated_sql", "success", "error_message",
             "execution_time", "result_count", "cached", "timestamp"} == cols
@@ -125,6 +148,8 @@ def test_engine_log_sink_path(spark, tmp_path):
     path = str(tmp_path / "engine_logs")
     eng = DataFabricEngine(spark, tables={"employees"}, log_sink_path=path)
     eng.process("how many employees")
+    eng.flush_log()
+    eng.close()
     logs = spark.read.parquet(path)
     assert logs.count() == 1
     assert logs.collect()[0].success is True
@@ -154,9 +179,124 @@ def test_concurrent_requests_keep_every_log_row(spark, tmp_path):
     finally:
         srv.shutdown()
         srv.server_close()
+    eng.flush_log()
+    eng.close()
     assert statuses == [200] * 48
     assert len(eng.query_log) == 48
     assert spark.read.parquet(path).count() == 48
+
+
+def test_request_path_starts_no_log_job(spark, tmp_path, held_flusher):
+    """With the sink on, a cache hit starts no Spark job: its log row is
+    only buffered, and the background flusher writes it later."""
+    register_employees(spark, n=50)
+    eng = DataFabricEngine(spark, tables={"employees"}, llm_provider=False,
+                           log_sink_path=str(tmp_path / "logs"))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    try:
+        assert eng.process("how many employees")["success"] is True
+        before = int(scheduler.nextJobId())
+        assert eng.process("how many employees")["cached"] is True
+        assert int(scheduler.nextJobId()) - before == 0
+    finally:
+        eng.close()
+
+
+def test_log_flush_is_one_file(spark, tmp_path, held_flusher):
+    register_employees(spark, n=200)
+    path = str(tmp_path / "logs")
+    eng = DataFabricEngine(spark, tables={"employees"}, llm_provider=False,
+                           log_sink_path=path)
+    try:
+        for i in range(20):
+            q = f"Show me employees with salary greater than {40000 + i}"
+            assert eng.process(q)["success"] is True
+        eng.flush_log()
+    finally:
+        eng.close()
+    assert spark.read.parquet(path).count() == 20
+    assert len(_parquet_files(path)) == 1
+
+
+def test_log_rows_keep_request_time(spark, tmp_path, held_flusher):
+    """Rows flushed together keep their own request times, not the flush's."""
+    register_employees(spark, n=50)
+    path = str(tmp_path / "logs")
+    eng = DataFabricEngine(spark, tables={"employees"}, llm_provider=False,
+                           log_sink_path=path)
+    try:
+        eng.process("how many employees")
+        time.sleep(1.1)
+        eng.process("Find employees in the Sales department")
+        eng.flush_log()
+    finally:
+        eng.close()
+    sink = {r.original_query: r.timestamp for r in spark.read.parquet(path).collect()}
+    assert len(_parquet_files(path)) == 1
+    assert len(sink) == 2 and len(set(sink.values())) == 2
+    assert abs((sink["how many employees"] - sink["Find employees in the Sales department"])
+               .total_seconds()) >= 1.0
+    for entry in eng.query_log:
+        # to the second; collect() returns naive local times
+        assert int(sink[entry.original_query].timestamp()) == int(entry.timestamp.timestamp())
+
+
+def test_failing_sink_keeps_buffer_bounded(spark, tmp_path, monkeypatch, held_flusher):
+    """A sink that cannot be written (its path is a regular file) neither
+    fails requests nor grows the buffer past its cap: the failed flush keeps
+    the newest rows for a retry, and the oldest are dropped and counted."""
+    monkeypatch.setattr(connectors, "LOG_BUFFER_MAX_ROWS", 8)
+    register_employees(spark, n=50)
+    blocker = tmp_path / "not_a_directory"
+    blocker.write_text("x")
+    eng = DataFabricEngine(spark, tables={"employees"}, llm_provider=False,
+                           log_sink_path=str(blocker))
+    try:
+        outs = [eng.process("how many employees") for _ in range(20)]
+        eng.flush_log()
+        assert all(o["success"] for o in outs)
+        assert len(eng.log_buffer) == 8
+        assert eng.log_buffer.dropped == 12
+    finally:
+        eng.close()
+    eng.close()  # idempotent
+
+
+def test_log_buffer_concurrent_adds_write_every_row_once(monkeypatch):
+    """Request threads add while the flusher writes and every third write
+    fails: each row reaches the sink exactly once (a lost update or a double
+    requeue breaks the multiset), and close() stops the flusher."""
+    written, calls = [], itertools.count()
+
+    def flaky_append(spark, path, rows):
+        if next(calls) % 3 == 0:
+            raise OSError("sink unavailable")
+        written.extend(rows)
+
+    monkeypatch.setattr(connectors, "append_query_log", flaky_append)
+    monkeypatch.setattr(connectors, "LOG_FLUSH_ROWS", 16)
+    monkeypatch.setattr(connectors, "LOG_FLUSH_SECONDS", 0.005)
+    buf = connectors.QueryLogBuffer(spark=None, path="unused")
+    expected = [(k, i) for k in range(8) for i in range(500)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=lambda k=k: [buf.add((k, i)) for i in range(500)])
+                   for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        buf.close()
+        buf._flusher.join(timeout=10)
+        assert not buf._flusher.is_alive()
+        buf.flush()  # two writes in a row never both fail
+        buf.flush()
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(buf) == 0 and buf.dropped == 0
+    assert sorted(written) == expected
 
 
 def test_salted_group_count_matches_plain(spark):
