@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.planner import DEPARTMENTS
+
 #: Tables generated by the driver at /root/testdata/sf*/ (TESTDATA.md).
 STAR_TABLES: tuple[str, ...] = (
     "region",
@@ -131,10 +133,6 @@ def _convert_nanos_columns(spark: SparkSession, df: DataFrame, path: str) -> Dat
 # ---------------------------------------------------------------------------
 # employees fixture (FIXTURES.md section 1)
 # ---------------------------------------------------------------------------
-
-#: The hardcoded department list from the reference's rule cascade
-#: (core/ai_query_generator.py:219,234) plus NULLs and one unlisted value.
-DEPARTMENTS = ["IT", "HR", "Sales", "Marketing", "Finance", "Engineering", "Operations"]
 
 _FIRST = ["Alice", "Bob", "Carol", "David", "Eve", "Frank", "Grace", "Heidi",
           "Ivan", "Judy", "Mallory", "Niaj", "Olivia", "Peggy", "Rupert",

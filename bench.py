@@ -219,6 +219,11 @@ def _gc_nudge_enabled(sf_dir: str) -> bool:
 #: keyed on the count, so switching never serves a stale layout).
 N_BENCH_FILES = int(os.environ.get("SPARK_GRAFT_BENCH_FILES", "32"))
 
+#: Largest-table size below which the bench runs its small-scale regime:
+#: 8 files per table, 8 shuffle partitions, AQE off, no micro-unit
+#: headroom guard. Also the broadcast threshold's cap (see bench_conf).
+SMALL_SCALE_BYTES = 64 * 1024 * 1024
+
 
 def _rechunk(sf_dir: str) -> str:
     """Ingest/layout stage: rewrite each table as a DIRECTORY of up to
@@ -246,7 +251,7 @@ def _rechunk(sf_dir: str) -> str:
     import pyarrow.parquet as pq
 
     # Scale-aware file count: at SMALL scale (largest source table under
-    # the same 64 MB threshold every other small-scale switch keys on) a
+    # SMALL_SCALE_BYTES, which every other small-scale switch keys on) a
     # 32-way scan is pure task-dispatch floor on a few-MB table. Paired
     # ABAB bench runs at sf0.1 (2026-08-15, alternating layouts, each a
     # full suite + same-process DuckDB pass): 32 files 18.28/17.62 s Spark
@@ -268,7 +273,7 @@ def _rechunk(sf_dir: str) -> str:
             ),
             default=0,
         )
-        if src_largest < 64 * 1024 * 1024:
+        if src_largest < SMALL_SCALE_BYTES:
             n_target = min(n_target, 8)
 
     suffix = "" if n_target == 32 else f"_n{n_target}"
@@ -331,6 +336,123 @@ def _warm_page_cache(sf_dir: str) -> None:
                     pass
 
 
+def largest_table_bytes(sf_dir: str) -> int:
+    """Bytes of the largest ``*.parquet`` table (file or part-file
+    directory) under sf_dir; 10 MiB when there is none."""
+
+    def _tbl_size(f: str) -> int:
+        p = os.path.join(sf_dir, f)
+        if os.path.isdir(p):
+            return sum(
+                os.path.getsize(os.path.join(p, g)) for g in os.listdir(p)
+            )
+        return os.path.getsize(p)
+
+    return max(
+        (_tbl_size(f) for f in os.listdir(sf_dir) if f.endswith(".parquet")),
+        default=10 * 1024 * 1024,
+    )
+
+
+def bench_conf(sf_dir: str) -> dict[str, str]:
+    """The bench session conf for the corpus at sf_dir (normally the
+    re-chunked layout): the one place every bench and tools/ session
+    takes its confs from. Pure: reads only file sizes and the
+    SPARK_GRAFT_CPUS / SPARK_DRIVER_MEMORY env vars."""
+    largest = largest_table_bytes(sf_dir)
+    small = largest < SMALL_SCALE_BYTES
+    # Local-bench-only tuning: the re-chunked layout is N_BENCH_FILES
+    # files per table, and the scan should run exactly one task per file —
+    # openCostInBytes = maxPartitionBytes (both larger than any part file)
+    # disables both file splitting and file combining, so every table gets
+    # full-core parallelism with no empty-split dispatch overhead. A real
+    # cluster keeps the defaults (its files are ~128 MB-row-group sized).
+    split = 256 * 1024 * 1024
+    # Broadcast capacity scales with executor memory; this bench runs one
+    # big-heap JVM, so dimensions that outgrow the 10 MB default (customer
+    # is ~25 MB at sf10) should still broadcast rather than force a
+    # fact-side shuffle (join_star at sf10: 36 s shuffled vs 10 s
+    # broadcast). Capped at 64 MB: the driver builds the broadcast hash
+    # relation single-threaded. Clamped so sf0.1 behavior is unchanged.
+    bcast = min(max(largest // 16, 10 * 1024 * 1024), SMALL_SCALE_BYTES)
+    return {
+        "spark.sql.files.maxPartitionBytes": str(split),
+        "spark.sql.files.openCostInBytes": str(split),
+        # At-scale shuffles run ONE partition per core: measured at
+        # sf10 vs 64 partitions it cut every shuffle-heavy query
+        # (join_star -21%, q5 -25%, q13 -33%, sessionize -49%) — with
+        # 32 threads in one JVM the extra waves buy no parallelism,
+        # only task dispatch and merge overhead, and AQE's coalescing
+        # does not recover the difference. A real cluster sizes this
+        # to its core count x 2-3 waves instead.
+        # Small-scale shuffles run 8 partitions: at sf0.1 every
+        # post-shuffle partition holds a few thousand rows, so task
+        # dispatch dominates — paired A/B (idle host, min-of-3,
+        # round 4) measured the shuffle-heavy subset 25% faster at 8
+        # than 16 (q3 −35%, q5 −35%, sessionize −25%, minhash −20%);
+        # 4 bought little more and starved the quadratic ngram cell's
+        # real compute in some runs.
+        # Default tracks the actual host core count so "one partition
+        # per core" holds everywhere; SPARK_GRAFT_CPUS overrides.
+        "spark.sql.shuffle.partitions": (
+            "8"
+            if small
+            else str(
+                int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32)))
+            )
+        ),
+        # AQE's value is runtime re-planning of LARGE shuffles
+        # (coalescing, skew splitting, broadcast demotion); at sf0.1
+        # every join already broadcasts and the only thing AQE adds is
+        # a stage-materialization boundary per exchange — measured 15%
+        # of the whole suite (8.42 s -> 7.20 s with it off). Scale
+        # keeps it on.
+        "spark.sql.adaptive.enabled": "false" if small else "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(bcast),
+        # 32 executor threads share ONE local JVM; the session default
+        # (8g) is tight past ~sf5, but the heap must stay under 32g so
+        # compressed oops survive (a 64g heap measured 10x SLOWER:
+        # q1 at sf10 72 s vs 7 s). DuckDB's memory is equally
+        # unconstrained, so this is parity, not an advantage.
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
+        # Console progress bars write \r-frames into the same stdout
+        # tail the driver parses the final JSON line from (the r07
+        # artifact shows them eating half the 2000-char capture) —
+        # keep the bench's stdout to the two JSON lines.
+        "spark.ui.showConsoleProgress": "false",
+    }
+
+
+def bench_session(sf_dir: str, app_name: str):
+    """The SparkSession every bench run and tools/ script uses."""
+    return get_spark(app_name=app_name, extra_conf=bench_conf(sf_dir))
+
+
+def timed_pass(cell: str, build, spark, sf_dir: str) -> tuple[float, float]:
+    """One timed pass of ``build(spark, sf_dir)`` under registry cell
+    ``cell``'s timing rule, executed through the noop sink. Returns
+    (elapsed seconds, untimed construction seconds).
+
+    The timed window normally starts AFTER plan construction: building a
+    DataFrame costs ~1000 py4j round-trips (~0.2 s measured for Q1) of
+    CLIENT-side expression chatter that a deployment pays once per query
+    template, not per run — charging it to every cell would benchmark the
+    Python gateway, not the engine. Exceptions (TIMED_CONSTRUCTION):
+    cells whose construction does the actual WORK (eager checkpoints,
+    bucketed merge writes, streaming drains) are timed in full, and their
+    untimed construction is 0. For everything else main() reports the
+    EXCLUDED construction seconds per cell (untimed_construction_s, worst
+    pass), so the residual asymmetries BASELINE.md documents — the q3/q5
+    counted broadcast probes, bucketed_join_revenue's once-per-corpus
+    write — are visible in the artifact instead of a doc note.
+    """
+    c0 = time.perf_counter()
+    df = build(spark, sf_dir)
+    start = c0 if cell in TIMED_CONSTRUCTION else time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - start, start - c0
+
+
 def main() -> None:
     # Startup hygiene: clear a SIGKILLed predecessor's token-suffixed
     # warehouse dirs (the atexit cleanup never ran for it).
@@ -355,87 +477,7 @@ def main() -> None:
     _warm_page_cache(sf_dir)
     gc_nudge = _gc_nudge_enabled(sf_dir)
     print(f"# gc_nudge={'on' if gc_nudge else 'off'}", file=sys.stderr)
-    # Local-bench-only tuning: the re-chunked layout is N_BENCH_FILES
-    # files per table, and the scan should run exactly one task per file —
-    # openCostInBytes = maxPartitionBytes (both larger than any part file)
-    # disables both file splitting and file combining, so every table gets
-    # full-core parallelism with no empty-split dispatch overhead. A real
-    # cluster keeps the defaults (its files are ~128 MB-row-group sized).
-    def _tbl_size(f: str) -> int:
-        p = os.path.join(sf_dir, f)
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(p, g)) for g in os.listdir(p)
-            )
-        return os.path.getsize(p)
-
-    largest = max(
-        (_tbl_size(f) for f in os.listdir(sf_dir) if f.endswith(".parquet")),
-        default=10 * 1024 * 1024,
-    )
-    split = 256 * 1024 * 1024
-    # Broadcast capacity scales with executor memory; this bench runs one
-    # big-heap JVM, so dimensions that outgrow the 10 MB default (customer
-    # is ~25 MB at sf10) should still broadcast rather than force a
-    # fact-side shuffle (join_star at sf10: 36 s shuffled vs 10 s
-    # broadcast). Capped at 64 MB: the driver builds the broadcast hash
-    # relation single-threaded. Clamped so sf0.1 behavior is unchanged.
-    bcast = min(max(largest // 16, 10 * 1024 * 1024), 64 * 1024 * 1024)
-    spark = get_spark(
-        app_name="fabric-bench",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(split),
-            "spark.sql.files.openCostInBytes": str(split),
-            # At-scale shuffles run ONE partition per core: measured at
-            # sf10 vs 64 partitions it cut every shuffle-heavy query
-            # (join_star -21%, q5 -25%, q13 -33%, sessionize -49%) — with
-            # 32 threads in one JVM the extra waves buy no parallelism,
-            # only task dispatch and merge overhead, and AQE's coalescing
-            # does not recover the difference. A real cluster sizes this
-            # to its core count x 2-3 waves instead.
-            # Small-scale shuffles run 8 partitions: at sf0.1 every
-            # post-shuffle partition holds a few thousand rows, so task
-            # dispatch dominates — paired A/B (idle host, min-of-3,
-            # round 4) measured the shuffle-heavy subset 25% faster at 8
-            # than 16 (q3 −35%, q5 −35%, sessionize −25%, minhash −20%);
-            # 4 bought little more and starved the quadratic ngram cell's
-            # real compute in some runs.
-            # Default tracks the actual host core count so "one partition
-            # per core" holds everywhere; SPARK_GRAFT_CPUS overrides.
-            "spark.sql.shuffle.partitions": (
-                "8"
-                if largest < 64 * 1024 * 1024
-                else str(
-                    int(
-                        os.environ.get(
-                            "SPARK_GRAFT_CPUS", str(os.cpu_count() or 32)
-                        )
-                    )
-                )
-            ),
-            # AQE's value is runtime re-planning of LARGE shuffles
-            # (coalescing, skew splitting, broadcast demotion); at sf0.1
-            # every join already broadcasts and the only thing AQE adds is
-            # a stage-materialization boundary per exchange — measured 15%
-            # of the whole suite (8.42 s -> 7.20 s with it off). Scale
-            # keeps it on.
-            "spark.sql.adaptive.enabled": (
-                "false" if largest < 64 * 1024 * 1024 else "true"
-            ),
-            "spark.sql.autoBroadcastJoinThreshold": str(bcast),
-            # 32 executor threads share ONE local JVM; the session default
-            # (8g) is tight past ~sf5, but the heap must stay under 32g so
-            # compressed oops survive (a 64g heap measured 10x SLOWER:
-            # q1 at sf10 72 s vs 7 s). DuckDB's memory is equally
-            # unconstrained, so this is parity, not an advantage.
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
-            # Console progress bars write \r-frames into the same stdout
-            # tail the driver parses the final JSON line from (the r07
-            # artifact shows them eating half the 2000-char capture) —
-            # keep the bench's stdout to the two JSON lines.
-            "spark.ui.showConsoleProgress": "false",
-        },
-    )
+    spark = bench_session(sf_dir, "fabric-bench")
 
     qs = queries()
     # JVM/codegen warmup on a trivial plan so the first timed query doesn't
@@ -449,7 +491,7 @@ def main() -> None:
     # a too-large corpus aborts loudly here instead of producing a wrapped
     # (ANSI-off) or failing (ANSI-on) sum mid-suite.
     wide_sums_grains: list[str] = []
-    if largest >= 64 * 1024 * 1024:
+    if largest_table_bytes(sf_dir) >= SMALL_SCALE_BYTES:
         from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.functions.numerics import (
             assert_microunit_headroom,
             set_wide_sums,
@@ -590,31 +632,11 @@ def main() -> None:
         for i in range(6):
             if i >= 3 and min(per_pass) >= 1.0:
                 break
-            # The timed window normally starts AFTER plan construction:
-            # building a DataFrame costs ~1000 py4j round-trips (~0.2 s
-            # measured for Q1) of CLIENT-side expression chatter that a
-            # deployment pays once per query template, not per run —
-            # charging it to every cell would benchmark the Python
-            # gateway, not the engine. Exceptions (TIMED_CONSTRUCTION):
-            # cells whose construction does the actual WORK (eager
-            # checkpoints, bucketed merge writes, streaming drains) are
-            # timed in full. For everything else the EXCLUDED
-            # construction seconds are now reported per cell
-            # (untimed_construction_s, worst pass), so the residual
-            # asymmetries BASELINE.md documents — the q3/q5 counted
-            # broadcast probes, bucketed_join_revenue's once-per-corpus
-            # write — are visible in the artifact instead of a doc note.
-            c0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            start = (
-                c0 if name in TIMED_CONSTRUCTION else time.perf_counter()
-            )
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - start
+            elapsed, construction = timed_pass(name, qs[name], spark, sf_dir)
             per_pass.append(elapsed)
             if name not in TIMED_CONSTRUCTION:
                 untimed_construction[name] = round(
-                    max(untimed_construction.get(name, 0.0), start - c0), 3
+                    max(untimed_construction.get(name, 0.0), construction), 3
                 )
             # Shuffle-file hygiene (r13): local-mode shuffle files live
             # until the ContextCleaner notices their dependency is
@@ -628,8 +650,8 @@ def main() -> None:
             # Scale-conditional since r14 (see _gc_nudge_enabled: at
             # sf0.1 the per-pass GC cost a uniform ~15% on every cell
             # and FIRED the symmetric tripwire; at sf0.1-scale corpora
-            # the shuffle residue it cleans is kilobytes).
-            df = None
+            # the shuffle residue it cleans is kilobytes). timed_pass has
+            # returned, so the pass's DataFrame is already unreachable.
             if gc_nudge:
                 spark._jvm.System.gc()
             # Budget break only AFTER a second pass: pass 1 carries

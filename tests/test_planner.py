@@ -112,3 +112,16 @@ def test_planner_sql_runs_on_spark(spark):
         sql = plan(question).sql
         rows = spark.sql(sql).collect()
         assert rows is not None, question
+
+
+def test_departments_defined_once():
+    """The employees fixture draws from the planner's department list,
+    the reference's own (core/ai_query_generator.py:219), not a copy."""
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans import (
+        planner,
+    )
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources import (
+        catalog,
+    )
+
+    assert catalog.DEPARTMENTS is planner.DEPARTMENTS

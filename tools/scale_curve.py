@@ -110,8 +110,7 @@ def main() -> None:
         # bench.py now embeds a same-process DuckDB reference pass
         # (duckdb_reference), so both engines are measured under ONE host
         # state — the r06 finding was a Spark leg and a DuckDB leg run
-        # under different contamination. The separate bench_duckdb.py
-        # remains for standalone use.
+        # under different contamination.
         ref = spark.get("duckdb_reference") or {}
         duck = {
             "metric": "duckdb_oracle_suite_wall_clock",
