@@ -19,25 +19,21 @@ log rows.
 from __future__ import annotations
 
 import hashlib
-import threading
 import time
-from collections import OrderedDict, deque
+from collections import deque
 from dataclasses import astuple, dataclass, field
 from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import SparkSession
 
+from .cache import CACHE_MAX_ENTRIES, CACHE_TTL_SECONDS, TTLCache  # noqa: F401
 from .functions.serialization import serialize_rows
 from .plans import star_planner
 from .plans.planner import Planner
 from .plans.validator import validate_select
 from .sources.catalog import inspect_table
 from .sources.connectors import QueryLogBuffer
-
-#: Reference cache policy (datafabric/settings.py:93-103, core/views.py:26-42).
-CACHE_TTL_SECONDS = 300
-CACHE_MAX_ENTRIES = 1000
 
 #: Hard cap on rows materialized at the driver per query. The deterministic
 #: cascade always emits a LIMIT, but the LLM path executes *validated
@@ -67,46 +63,6 @@ class QueryLogEntry:
     result_count: int
     cached: bool
     timestamp: datetime = field(default_factory=lambda: datetime.now(timezone.utc))
-
-
-class TTLCache:
-    """md5-keyed, TTL'd, success-only result cache with LRU-ish culling —
-    the LocMemCache semantics the reference configures (MAX_ENTRIES=1000).
-    Locked: ``api.serve`` runs requests on concurrent threads."""
-
-    def __init__(self, ttl: float = CACHE_TTL_SECONDS, max_entries: int = CACHE_MAX_ENTRIES):
-        self.ttl = ttl
-        self.max_entries = max_entries
-        self._store: OrderedDict[str, tuple[float, Any]] = OrderedDict()
-        self._lock = threading.Lock()
-
-    @staticmethod
-    def key_for(query: str) -> str:
-        return "ai_query_" + hashlib.md5(query.encode()).hexdigest()
-
-    def get(self, key: str, now: float | None = None) -> Any | None:
-        now = time.time() if now is None else now
-        with self._lock:
-            hit = self._store.get(key)
-            if hit is None:
-                return None
-            expires, value = hit
-            if now >= expires:
-                del self._store[key]
-                return None
-            self._store.move_to_end(key)
-            return value
-
-    def set(self, key: str, value: Any, now: float | None = None) -> None:
-        now = time.time() if now is None else now
-        with self._lock:
-            if len(self._store) >= self.max_entries:
-                # Cull a third, oldest-first (CULL_FREQUENCY=3 semantics).
-                for _ in range(max(1, self.max_entries // 3)):
-                    if not self._store:
-                        break
-                    self._store.popitem(last=False)
-            self._store[key] = (now + self.ttl, value)
 
 
 class DataFabricEngine:
@@ -165,7 +121,7 @@ class DataFabricEngine:
         if not user_query:
             return {"success": False, "error": "Query cannot be empty"}
 
-        cache_key = TTLCache.key_for(user_query)
+        cache_key = "ai_query_" + hashlib.md5(user_query.encode()).hexdigest()
         cached = self.cache.get(cache_key)
         if cached is not None:
             out = dict(cached)

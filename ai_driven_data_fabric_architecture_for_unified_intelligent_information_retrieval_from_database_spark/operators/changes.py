@@ -369,6 +369,7 @@ def cdc_merge_pruned(spark, t):
     (counts move between statuses, deletes shrink them, inserts create
     status 'N' — every merge branch pinned); the oracle replays the
     same merge from raw orders."""
+    from ..sources.catalog import read_parquet
     from ..sources.sinks import write_partitioned
     from .scale import _cached_layout, _corpus_digest
 
@@ -386,7 +387,7 @@ def cdc_merge_pruned(spark, t):
         "orders_by_year",
         lambda p: write_partitioned(snap, p, ["o_year"]),
     )
-    snap_t = spark.read.parquet(path)
+    snap_t = read_parquet(spark, path)
 
     # Both the touched slice and the feed derive from the SAME pruned
     # partition read (in production the feed arrives externally; deriving

@@ -21,6 +21,8 @@ Scale notes, applied throughout:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from ..functions.numerics import (
@@ -30,7 +32,11 @@ from ..functions.numerics import (
     stable_avg,
     stable_sum,
 )
+from ..cache import TTLCache
 from .registry import query
+
+#: Bound on the memoized COUNT probes (one entry per probed slice).
+PROBE_CACHE_MAX_ENTRIES = 1024
 
 # ---------------------------------------------------------------------------
 # Scans / projections (S1, S3, P1-P4, O1, O4)
@@ -636,7 +642,8 @@ def _fits_broadcast_counted(spark, df) -> bool:
 #: estimate alone would serve a stale row count for a corpus rewritten
 #: in place at an identical byte size, silently flipping the
 #: broadcast-vs-shuffle choice for the rest of the process (r07 advice).
-_PROBE_COUNT_CACHE: dict[str, int] = {}
+#: Bounded and locked: operator routes probe from concurrent HTTP threads.
+_PROBE_COUNT_CACHE = TTLCache(math.inf, PROBE_CACHE_MAX_ENTRIES)
 
 
 def _counted_probe(df, plan, est: int) -> int:
@@ -654,7 +661,7 @@ def _counted_probe(df, plan, est: int) -> int:
     n = _PROBE_COUNT_CACHE.get(key)
     if n is None:
         n = df.count()
-        _PROBE_COUNT_CACHE[key] = n
+        _PROBE_COUNT_CACHE.set(key, n)
     return n
 
 

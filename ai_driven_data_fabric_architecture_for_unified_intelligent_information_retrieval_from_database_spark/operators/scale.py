@@ -111,8 +111,7 @@ def partition_pruned_daily_read(spark, t):
     same fixed file names (exactly what tools/make_scaled_sf.py does) —
     and the write is skipped when a completed copy (_SUCCESS marker) is
     already there."""
-    import os
-
+    from ..sources.catalog import read_parquet
     from ..sources.sinks import write_partitioned
 
     day_events = t["events"].withColumn("day", F.col("ts").cast("date"))
@@ -124,7 +123,7 @@ def partition_pruned_daily_read(spark, t):
         lambda p: write_partitioned(day_events, p, ["day"]),
     )
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .where(F.col("day").between("2024-01-10", "2024-01-12"))
         .groupBy("day")
         .agg(F.count("*").alias("n_events"))
@@ -165,6 +164,7 @@ def layout_zorder_box_read(spark, t):
     digest-keyed layout cache; predicate literals pinned per SURVEY §7.2
     (586 rows, 5 groups at sf0.01 — non-vacuous)."""
     from ..functions.numerics import stable_sum
+    from ..sources.catalog import read_parquet
     from ..sources.sinks import write_zordered
 
     ev = t["events"]
@@ -182,7 +182,7 @@ def layout_zorder_box_read(spark, t):
         ),
     )
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .where(
             F.col("user_id").between(40, 59)
             & (F.col("ts") >= F.lit("2024-01-08").cast("timestamp_ntz"))
@@ -625,18 +625,17 @@ def _corpus_digest(*dfs) -> str:
     DataFrame — the freshness key shared by every cached-layout operator
     here (see partition_pruned_daily_read for why names alone are not
     enough; a multi-table consumer must key on ALL its inputs or a
-    regenerated second table is served stale)."""
+    regenerated second table is served stale). Each file's (size, mtime)
+    comes from the catalog's file-signature helper, the key its schema
+    cache uses too."""
     import hashlib
-    import os
     from urllib.parse import urlparse
 
+    from ..sources.catalog import file_stat
+
     def sig(uri: str) -> str:
-        p = urlparse(uri).path or uri
-        try:
-            st = os.stat(p)
-            return f"{uri}\t{st.st_size}\t{st.st_mtime_ns}"
-        except OSError:
-            return uri
+        st = file_stat(urlparse(uri).path or uri)
+        return uri if st is None else f"{uri}\t{st[0]}\t{st[1]}"
 
     files = sorted(sig(f) for df in dfs for f in df.inputFiles())
     return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]

@@ -360,11 +360,11 @@ def streaming_cdc_upsert(spark, sf_dir):
     stops shuffling — same foreachBatch, different target layout."""
     import os
 
-    from ..sources.catalog import register_views
+    from ..sources.catalog import read_parquet, register_views
     from .scale import _cached_layout, _corpus_digest, warehouse_scratch_dir, warehouse_scratch_root
 
     register_views(spark, sf_dir)
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     # The staged replay is a LAYOUT of the corpus: written once per
     # corpus through the shared digest-keyed cache (the r08 review found
     # a fresh mkdtemp full-corpus rewrite leaking per invocation — the
@@ -990,7 +990,7 @@ def streaming_cdc_upsert_bucketed(spark, sf_dir):
     Measured isolation cost: ~0.16 s per drain at sf0.1."""
     import os
 
-    from ..sources.catalog import register_views
+    from ..sources.catalog import read_parquet, register_views
     from .scale import (
         _cached_layout,
         _corpus_digest,
@@ -999,7 +999,7 @@ def streaming_cdc_upsert_bucketed(spark, sf_dir):
     )
 
     register_views(spark, sf_dir)
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     stage = _cached_layout(
         warehouse_scratch_root(spark, "stgcdc"),
         _corpus_digest(raw),
@@ -1248,11 +1248,11 @@ def _register_streaming_dedup() -> None:
         partition-local."""
         import os
 
-        from ..sources.catalog import register_views
+        from ..sources.catalog import read_parquet, register_views
         from .scale import _cached_layout, _corpus_digest, warehouse_scratch_root
 
         register_views(spark, sf_dir)
-        raw = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        raw = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
         stage = _cached_layout(
             warehouse_scratch_root(spark, "stgdds"),
             _corpus_digest(raw),

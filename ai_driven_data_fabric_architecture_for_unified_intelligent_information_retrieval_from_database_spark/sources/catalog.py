@@ -9,19 +9,28 @@ Here the catalog is schema-on-read parquet registered once as temp views;
 introspection comes from the cached ``StructType`` (a deliberate
 improvement documented in SURVEY.md section 7.2).
 
-Scale posture: views are lazy — registering ten 100 TB tables costs one
-footer read each. All filtering/projection later benefits from parquet
+Scale posture: views are lazy, and their schemas come from a process-wide
+cache keyed on the tables' file signatures (sorted ``(file, size,
+mtime_ns)``) plus the session's parquet schema-inference confs. The first
+session of a process to read a table pays one schema-inference job and one
+pyarrow footer read for it; every later session — and every operator call
+that re-reads a source table — reads it with the cached ``StructType`` and
+starts no Spark job. Rewriting a file changes its signature, so the next
+read infers again. All filtering/projection later benefits from parquet
 predicate pushdown and column pruning; nothing here materializes data.
 """
 
 from __future__ import annotations
 
+import math
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import TTLCache
 from ..plans.planner import DEPARTMENTS
 
 #: Tables generated by the driver at /root/testdata/sf*/ (TESTDATA.md).
@@ -40,17 +49,112 @@ STAR_TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: (session id, sf_dir) -> registered table dict. Registration costs ~10
-#: footer reads + conf sets; operators call it per query, so cache it —
-#: the same reason the engine replaced the reference's per-request schema
-#: introspection (SURVEY.md 7.2).
-_VIEW_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
+#: Bound on the process-wide schema cache (one entry per table path, file
+#: signature and inference confs).
+SCHEMA_CACHE_MAX_ENTRIES = 256
 
-#: session id -> sf_dir whose tables currently own the temp-view names.
+#: Bound on the per-session view sets and view owners.
+VIEW_CACHE_MAX_ENTRIES = 64
+
+#: Session confs that change what parquet schema inference returns for the
+#: same files, so they are part of the schema-cache key. The last one types
+#: the partition columns of the partitioned layouts read through
+#: :func:`read_parquet`.
+INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
+#: (table path, file signature, inference confs) -> (StructType, nanos
+#: columns). Process-wide: a new session reads known files without
+#: re-inferring their schema (the reason the engine replaced the
+#: reference's per-request schema introspection, SURVEY.md 7.2).
+_SCHEMA_CACHE = TTLCache(math.inf, SCHEMA_CACHE_MAX_ENTRIES)
+
+#: (session UUID, sf_dir) -> registered table dict. Operators call
+#: register_views per query; a hit skips the reads and the conf sets. Keyed
+#: on the JVM session's UUID, which — unlike ``id()`` of a Python object —
+#: is never reused by a later session.
+_VIEW_CACHE = TTLCache(math.inf, VIEW_CACHE_MAX_ENTRIES)
+
+#: session UUID -> sf_dir whose tables currently own the temp-view names.
 #: Needed because the cache can hit while another sf_dir's registration has
 #: overwritten the views in between — SQL-text paths (spark.sql over view
 #: names) would silently read the wrong scale factor.
-_VIEW_OWNER: dict[int, str] = {}
+_VIEW_OWNER = TTLCache(math.inf, VIEW_CACHE_MAX_ENTRIES)
+
+
+def file_stat(path: str) -> tuple[int, int] | None:
+    """``(size, mtime_ns)`` of one local file; ``None`` when it has no
+    local ``os.stat``."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_size, st.st_mtime_ns
+
+
+def file_signature(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """Sorted ``(file, size, mtime_ns)`` of every file at or under
+    ``path`` — the freshness key of anything cached about a table's files.
+    ``None`` for a path with no local ``os.stat`` (``hdfs://``, ``s3a://``,
+    a glob, a missing path): such a path is never cached."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        return None
+    root = os.path.abspath(parsed.path if parsed.scheme else path)
+    if os.path.isdir(root):
+        files = [os.path.join(d, f) for d, _, names in os.walk(root) for f in names]
+    elif os.path.isfile(root):
+        files = [root]
+    else:
+        return None
+    out = []
+    for f in files:
+        st = file_stat(f)
+        if st is None:
+            return None
+        out.append((f, *st))
+    return tuple(sorted(out))
+
+
+def _inference_confs(spark: SparkSession) -> tuple[str | None, ...]:
+    return tuple(spark.conf.get(k, None) for k in INFERENCE_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, tuple[str, ...]]:
+    """``spark.read.parquet(path)`` plus its TIMESTAMP(NANOS) columns,
+    from the schema cache when the path's files and the session's
+    inference confs are known: a hit starts no Spark job and reads no
+    footer. A miss is cached only when the footer read succeeded; files
+    rewritten during the read change the signature, so the entry stored
+    under the old one is never hit."""
+    sig = file_signature(path)
+    key = None
+    if sig is not None:
+        key = (os.path.abspath(path), sig, _inference_confs(spark))
+        hit = _SCHEMA_CACHE.get(key)
+        if hit is not None:
+            schema, nanos = hit
+            return spark.read.schema(schema).parquet(path), nanos
+    df = spark.read.parquet(path)
+    nanos = _nanos_columns(df.schema, path)
+    if key is not None and nanos is not None:
+        _SCHEMA_CACHE.set(key, (df.schema, nanos))
+    return df, nanos or ()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A source table read as ``spark.read.parquet(path)`` would, with its
+    schema from the process-wide cache (no inference job on a hit).
+    TIMESTAMP(NANOS) columns stay the raw longs ``nanosAsLong`` gives; use
+    :func:`register_views` for the converted catalog view."""
+    return _read_parquet(spark, path)[0]
 
 
 def register_views(
@@ -66,7 +170,7 @@ def register_views(
     default; with ``nanosAsLong`` Spark 4 surfaces them as TIMESTAMP_NTZ,
     which matches DuckDB's naive-timestamp semantics exactly).
     """
-    session_id = id(spark._jsparkSession)
+    session_id = spark._jsparkSession.sessionUUID()
     cache_key = (session_id, sf_dir)
     cached = _VIEW_CACHE.get(cache_key)
     if cached is not None and tables == STAR_TABLES:
@@ -75,32 +179,26 @@ def register_views(
             # built — restore them so SQL-text paths resolve to this scale
             for name, df in cached.items():
                 df.createOrReplaceTempView(name)
-            _VIEW_OWNER[session_id] = sf_dir
+            _VIEW_OWNER.set(session_id, sf_dir)
         return cached
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     out: dict[str, DataFrame] = {}
     for name in tables:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        df = _convert_nanos_columns(spark, df=spark.read.parquet(path), path=path)
+        df, nanos = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+        df = _convert_nanos_columns(df, nanos)
         df.createOrReplaceTempView(name)
         out[name] = df
     if tables == STAR_TABLES:
-        _VIEW_CACHE[cache_key] = out
-        _VIEW_OWNER[session_id] = sf_dir
+        _VIEW_CACHE.set(cache_key, out)
+        _VIEW_OWNER.set(session_id, sf_dir)
     return out
 
 
-def _convert_nanos_columns(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Restore timestamp semantics for TIMESTAMP(NANOS) parquet columns.
-
-    With ``nanosAsLong`` those columns surface as epoch-nanosecond longs;
-    consult the parquet footer (pyarrow) for which long columns are really
-    timestamps and convert: floor-divide to micros (matching DuckDB's
-    ns->us truncation) -> TIMESTAMP_NTZ under the pinned UTC session.
-    A footer read costs O(1); the per-row conversion is a codegen'd integer
-    op, and the column keeps min/max pruning via the underlying long stats.
-    """
+def _nanos_columns(schema: T.StructType, path: str) -> tuple[str, ...] | None:
+    """The TIMESTAMP(NANOS) parquet columns that ``nanosAsLong`` surfaced
+    as longs in ``schema``, from one pyarrow footer read; ``None`` when the
+    footer cannot be read (so the result is not cached)."""
     try:
         import pyarrow.parquet as pq
         import pyarrow.types as pat
@@ -109,24 +207,33 @@ def _convert_nanos_columns(spark: SparkSession, df: DataFrame, path: str) -> Dat
         if os.path.isdir(path):
             inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
             if not inner:
-                return df
+                return ()
             file_path = os.path.join(path, inner[0])
         arrow_schema = pq.read_schema(file_path)
     except Exception:
-        return df
-    spark_types = dict(df.dtypes)
-    for field_ in arrow_schema:
-        if (
-            pat.is_timestamp(field_.type)
-            and field_.type.unit == "ns"
-            and spark_types.get(field_.name) == "bigint"
-        ):
-            df = df.withColumn(
-                field_.name,
-                F.timestamp_micros(F.expr(f"`{field_.name}` div 1000")).cast(
-                    "timestamp_ntz"
-                ),
-            )
+        return None
+    longs = {f.name for f in schema.fields if isinstance(f.dataType, T.LongType)}
+    return tuple(
+        f.name
+        for f in arrow_schema
+        if pat.is_timestamp(f.type) and f.type.unit == "ns" and f.name in longs
+    )
+
+
+def _convert_nanos_columns(df: DataFrame, columns: tuple[str, ...]) -> DataFrame:
+    """Restore timestamp semantics for TIMESTAMP(NANOS) parquet columns.
+
+    With ``nanosAsLong`` those columns surface as epoch-nanosecond longs
+    (:func:`_nanos_columns` finds them); convert: floor-divide to micros
+    (matching DuckDB's ns->us truncation) -> TIMESTAMP_NTZ under the pinned
+    UTC session. The per-row conversion is a codegen'd integer op, and the
+    column keeps min/max pruning via the underlying long stats.
+    """
+    for name in columns:
+        df = df.withColumn(
+            name,
+            F.timestamp_micros(F.expr(f"`{name}` div 1000")).cast("timestamp_ntz"),
+        )
     return df
 
 

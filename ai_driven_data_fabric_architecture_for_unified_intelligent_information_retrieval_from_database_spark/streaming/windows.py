@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import register_views
+from ..sources.catalog import read_parquet, register_views
 
 
 def events_stream(
@@ -44,7 +44,7 @@ def events_stream(
 
     register_views(spark, sf_dir)  # pins session confs (UTC, nanosAsLong)
     src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet(spark, src).schema
     if stage_dir is None:
         stage_dir = warehouse_scratch_dir(spark, "evstage")
     else:
@@ -83,7 +83,7 @@ def events_stream_from_dir(
     file order (oldest mtime first), which is how the tests replay the
     corpus as an out-of-order multi-batch feed."""
     register_views(spark, sf_dir)  # pins session confs (UTC, nanosAsLong)
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     return events_stream_from_stage(
         spark, parts_dir, raw_schema, max_files_per_trigger
     )

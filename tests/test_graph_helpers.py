@@ -111,6 +111,42 @@ def test_counted_probe_memoizes(spark, monkeypatch):
     )
 
 
+def test_counted_probe_cache_is_bounded(spark, monkeypatch):
+    """Past its cap the probe memo evicts the least recently used slice,
+    which then counts again."""
+    import os
+
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators import (
+        relational,
+    )
+    from conftest import SF_SMOKE
+
+    relational._PROBE_COUNT_CACHE.clear()
+    monkeypatch.setattr(relational._PROBE_COUNT_CACHE, "max_entries", 2)
+    calls = {"n": 0}
+    orig_count = type(spark.range(1)).count
+
+    def counting(self):
+        calls["n"] += 1
+        return orig_count(self)
+
+    monkeypatch.setattr(type(spark.range(1)), "count", counting)
+    orders = spark.read.parquet(os.path.join(SF_SMOKE, "orders.parquet"))
+
+    def probe(floor):
+        df = orders.where(F.col("o_totalprice") > floor)
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return relational._counted_probe(df, plan, int(str(plan.stats().sizeInBytes())))
+
+    first = probe(1000)
+    probe(2000)
+    probe(3000)
+    assert calls["n"] == 3 and len(relational._PROBE_COUNT_CACHE) == 2
+    assert probe(1000) == first
+    assert calls["n"] == 4, "an evicted slice must be counted again"
+    relational._PROBE_COUNT_CACHE.clear()
+
+
 def test_copurchase_pair_counts_matches_plain_rollup(spark):
     """The struct-explode pair rollup must match a plain distinct+self-join
     on the smoke corpus — built from lineitem directly AND from a shared

@@ -1,8 +1,9 @@
-"""Lint for tools/ (the repo has no CI) and the A/B harness's output
-fingerprint."""
+"""Lint for tools/ (the repo has no CI), for the package's parquet reads,
+and the A/B harness's output fingerprint."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import os
 import py_compile
@@ -10,7 +11,22 @@ import sys
 
 import pytest
 
-TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(ROOT, "tools")
+PACKAGE = os.path.join(
+    ROOT, "ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark"
+)
+
+#: Direct ``<session>.read.parquet(...)`` calls left in the package, per
+#: file. Source tables go through ``sources.catalog.read_parquet`` (schema
+#: from the process-wide cache); these read the catalog's own misses,
+#: operator state, scratch stages and sinks.
+DIRECT_PARQUET_READS = {
+    "sources/catalog.py": 1,
+    "sources/sinks.py": 3,
+    "streaming/rollup.py": 1,
+    "operators/streaming_entries.py": 4,
+}
 
 #: Session confs bench.bench_conf owns; a tool that sets one by hand has
 #: forked the bench session.
@@ -35,6 +51,28 @@ def test_tools_compile_and_take_session_conf_from_bench(tmp_path):
             text = fh.read()
         for key in BENCH_CONF_KEYS:
             assert key not in text, f"tools/{name} sets {key}; use bench.bench_session"
+
+
+def test_direct_parquet_reads_are_allowlisted():
+    found = {}
+    for d, _, names in os.walk(PACKAGE):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(d, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            n = sum(
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "read"
+                for node in ast.walk(tree)
+            )
+            if n:
+                found[os.path.relpath(path, PACKAGE)] = n
+    assert found == DIRECT_PARQUET_READS
 
 
 def test_tools_stay_few():
