@@ -7,23 +7,36 @@ Response shape matches ``core/ai_query_generator.py:410-417`` +
 ``core/views.py:48``: ``{success, original_query, sql_query, data, columns,
 row_count, cached}`` (plus ``error`` on failure).
 
-Deviations (SURVEY.md 7.2): schema introspection is cached catalog metadata
-instead of per-request ``information_schema`` queries; BOTH planner paths are
-validated (the reference trusts its fallback unvalidated, ``:391-407``);
-validation is plan-based, not substring-based; the query-log sink is written
-in batches off the request thread (``sources/connectors.py``), so a crash
-without :meth:`DataFabricEngine.close` loses at most ~``LOG_FLUSH_SECONDS`` of
-log rows.
+Deviations (SURVEY.md 7.2):
+
+- schema introspection is cached catalog metadata instead of per-request
+  ``information_schema`` queries;
+- BOTH planner paths are validated (the reference trusts its fallback
+  unvalidated, ``:391-407``), and validation is plan-based, not
+  substring-based;
+- the query-log sink is written in batches off the request thread
+  (``sources/connectors.py``), so a crash without
+  :meth:`DataFabricEngine.close` loses at most ~``LOG_FLUSH_SECONDS`` of log
+  rows;
+- SQL tier: behind the reference's question-keyed result cache sits a
+  second tier keyed on the planned query (the SQL string, or an operator
+  route's name and args), so questions that plan to one query share one
+  Spark execution. An entry exists only after its SQL passed validation
+  under this engine's allowlist and ran, so a hit skips validation and
+  starts no Spark job. Both tiers drop an entry whose input files changed
+  since it was computed.
 """
 
 from __future__ import annotations
 
 import hashlib
+import threading
 import time
 from collections import deque
 from dataclasses import astuple, dataclass, field
 from datetime import datetime, timezone
-from typing import Any
+from typing import Any, NamedTuple
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 
@@ -32,7 +45,7 @@ from .functions.serialization import serialize_rows
 from .plans import star_planner
 from .plans.planner import Planner
 from .plans.validator import validate_select
-from .sources.catalog import inspect_table
+from .sources.catalog import file_stat, inspect_table
 from .sources.connectors import QueryLogBuffer
 
 #: Hard cap on rows materialized at the driver per query. The deterministic
@@ -63,6 +76,18 @@ class QueryLogEntry:
     result_count: int
     cached: bool
     timestamp: datetime = field(default_factory=lambda: datetime.now(timezone.utc))
+
+
+class CacheEntry(NamedTuple):
+    """A successful answer in the result cache. Both tiers hold the same
+    entry, or copies whose payload differs only in ``original_query``, so
+    they share one ``data``/``columns`` list."""
+
+    payload: dict[str, Any]
+    #: ``(file, size, mtime_ns)`` of the files it read (:func:`_input_stats`)
+    inputs: tuple[tuple[str, int, int], ...]
+    #: ``time.time()`` of the request that computed it; the TTL counts from here
+    created: float
 
 
 class DataFabricEngine:
@@ -98,7 +123,12 @@ class DataFabricEngine:
             llm_provider = None
         self.planner = Planner(table=default_table, llm_provider=llm_provider,
                                schema_text=self._schema_text(default_table))
+        #: Result cache tiers: question text -> :class:`CacheEntry`, and
+        #: planned query (:func:`_query_key`) -> :class:`CacheEntry`.
         self.cache = TTLCache()
+        self.sql_cache = TTLCache()
+        self._stats = dict.fromkeys(("question_hits", "sql_hits", "misses", "stale"), 0)
+        self._stats_lock = threading.Lock()
         self.query_log: deque[QueryLogEntry] = deque(maxlen=QUERY_LOG_MAX_ENTRIES)
         self.log_sink_path = log_sink_path
         self.log_buffer = QueryLogBuffer(spark, log_sink_path) if log_sink_path else None
@@ -122,20 +152,27 @@ class DataFabricEngine:
             return {"success": False, "error": "Query cannot be empty"}
 
         cache_key = "ai_query_" + hashlib.md5(user_query.encode()).hexdigest()
-        cached = self.cache.get(cache_key)
-        if cached is not None:
-            out = dict(cached)
-            out["cached"] = True
-            self._log(user_query, out.get("sql_query"), True, None, 0.0,
-                      out.get("row_count", 0), cached=True)
-            return out
+        hit = self._fresh(self.cache, cache_key)
+        if hit is not None:
+            self._count("question_hits")
+            return self._hit(user_query, hit.payload)
 
         start = time.time()
         sql_query: str | None = None
+        outcome = "misses"
         try:
             planned = self._plan(user_query)
             sql_query = planned.sql
-            columns, data, truncated = self._execute_df(self._dataframe(planned))
+            query_key = _query_key(planned)
+            hit = self._fresh(self.sql_cache, query_key)
+            if hit is not None:
+                outcome = "sql_hits"
+                payload = {**hit.payload, "original_query": user_query}
+                # expires with the SQL-tier entry: an answer never outlives
+                # the TTL counted from its execution
+                self.cache.set(cache_key, hit._replace(payload=payload), now=hit.created)
+                return self._hit(user_query, payload)
+            columns, data, truncated, inputs = self._execute_df(self._dataframe(planned))
         except Exception as exc:  # mirrors the catch-all envelope :432-445
             self._log(user_query, sql_query, False, str(exc), time.time() - start, 0)
             return {
@@ -148,6 +185,8 @@ class DataFabricEngine:
                 "row_count": 0,
                 "cached": False,
             }
+        finally:
+            self._count(outcome)
         response: dict[str, Any] = {
             "success": True,
             "original_query": user_query,
@@ -158,8 +197,41 @@ class DataFabricEngine:
             "truncated": truncated,
         }
         self._log(user_query, sql_query, True, None, time.time() - start, len(data))
-        self.cache.set(cache_key, response)
+        entry = CacheEntry(response, inputs, start)
+        self.cache.set(cache_key, entry, now=start)
+        self.sql_cache.set(query_key, entry, now=start)
         return {**response, "cached": False}
+
+    # -- result cache tiers ---------------------------------------------------
+    def _fresh(self, tier: TTLCache, key) -> CacheEntry | None:
+        """The tier's entry for ``key``, unless one of the files it read has
+        changed since (then it counts as ``stale`` and the caller misses).
+        Only ``os.stat`` calls: no Spark job, no JVM call."""
+        entry = tier.get(key)
+        if entry is None:
+            return None
+        if any(file_stat(path) != (size, mtime) for path, size, mtime in entry.inputs):
+            self._count("stale")
+            return None
+        return entry
+
+    def _hit(self, user_query: str, payload: dict) -> dict[str, Any]:
+        self._log(user_query, payload.get("sql_query"), True, None, 0.0,
+                  payload.get("row_count", 0), cached=True)
+        return {**payload, "cached": True}
+
+    def _count(self, name: str) -> None:
+        with self._stats_lock:
+            self._stats[name] += 1
+
+    @property
+    def cache_stats(self) -> dict[str, int]:
+        """Requests answered by the question tier (``question_hits``) or the
+        SQL tier (``sql_hits``), requests that missed both (``misses``,
+        failures included), and entries dropped because an input file had
+        changed (``stale``)."""
+        with self._stats_lock:
+            return dict(self._stats)
 
     def _plan(self, user_query: str):
         """Precedence mirrors the reference lifecycle (:379-393): the
@@ -196,17 +268,23 @@ class DataFabricEngine:
         validated = validate_select(self.spark, planned.sql, self.tables)
         return self.spark.sql(validated.sql)
 
-    def _execute_df(self, df) -> tuple[list[str], list[dict], bool]:
+    def _execute_df(self, df) -> tuple[list[str], list[dict], bool, tuple]:
         """Collect + serialize under a HARD cap of ``max_result_rows``: the
         deterministic cascade emits its own LIMITs, but the LLM path runs
         validated arbitrary SELECTs, and an unbounded collect there runs
         out of memory at scale. One sentinel row past the cap distinguishes
         "exactly cap rows" from truncation. Returns ``(columns, rows,
-        truncated)``; failures raise."""
+        truncated, inputs)`` with ``inputs`` from :func:`_input_stats`;
+        failures raise."""
         cap = self.max_result_rows
         columns = df.columns
-        rows = [tuple(r) for r in df.limit(cap + 1).collect()]
-        return columns, serialize_rows(columns, rows[:cap]), len(rows) > cap
+        limited = df.limit(cap + 1)
+        # Stat the inputs before the collect, so a file rewritten while it
+        # runs fails the next hit's check. Same DataFrame: the collect
+        # reuses the plan inputFiles() optimized.
+        inputs = _input_stats(limited)
+        rows = [tuple(r) for r in limited.collect()]
+        return columns, serialize_rows(columns, rows[:cap]), len(rows) > cap, inputs
 
     # -- logging sink (core/ai_query_generator.py:364-377) ------------------
     def _log(self, q, sql, success, err, secs, n, cached=False) -> None:
@@ -285,6 +363,31 @@ class DataFabricEngine:
             }
         except Exception as exc:
             return {"success": False, "error": str(exc)}
+
+
+def _query_key(planned) -> tuple:
+    """The SQL-tier key: the planned SQL string, or an operator route's name
+    and args (its ``sql`` is only the reference text it reports)."""
+    operator = getattr(planned, "operator", None)
+    if operator:
+        return ("operator", operator, tuple(planned.operator_args))
+    return ("sql", planned.sql)
+
+
+def _input_stats(df) -> tuple[tuple[str, int, int], ...]:
+    """``(file, size, mtime_ns)`` of every local file ``df`` reads: the
+    freshness record of a cached answer. A non-local input is left out, so
+    only the TTL expires answers over it."""
+    out = []
+    for uri in df.inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            continue
+        path = unquote(parsed.path)
+        st = file_stat(path)
+        if st is not None:
+            out.append((path, *st))
+    return tuple(out)
 
 
 #: The reference's canonical 15-question corpus (core/views.py:68-84) — the
