@@ -41,7 +41,9 @@ class TTLCache:
     def set(self, key: Any, value: Any, now: float | None = None) -> None:
         now = time.time() if now is None else now
         with self._lock:
-            if len(self._store) >= self.max_entries:
+            if key in self._store:
+                self._store.move_to_end(key)
+            elif len(self._store) >= self.max_entries:
                 # Cull a third, oldest-first (CULL_FREQUENCY=3 semantics).
                 for _ in range(max(1, self.max_entries // 3)):
                     if not self._store:

@@ -23,8 +23,10 @@ Deviations (SURVEY.md 7.2):
   route's name and args), so questions that plan to one query share one
   Spark execution. An entry exists only after its SQL passed validation
   under this engine's allowlist and ran, so a hit skips validation and
-  starts no Spark job. Both tiers drop an entry whose input files changed
-  since it was computed.
+  starts no Spark job. Skipping is sound only because validation is
+  parse-only: its verdict depends on nothing but the SQL text and the
+  engine's fixed allowlist. Both tiers drop an entry whose input files
+  changed since it was computed.
 """
 
 from __future__ import annotations

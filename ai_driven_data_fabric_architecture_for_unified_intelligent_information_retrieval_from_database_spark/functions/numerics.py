@@ -57,16 +57,13 @@ _SUM_DECIMAL = "decimal(18,6)"
 # (decimal-accumulator) forms instead of aborting past the micro-unit
 # range. Checked at QUERY-BUILD time (operators construct their plans per
 # call), so a caller that detects an over-range corpus — bench.py's
-# headroom guard, or any deployment's startup probe — flips this once and
-# every money reduction in the engine degrades to the exact-to-1e22 form
-# (~1.6x slower on those aggregates) instead of raising mid-query under
-# ANSI mode. The DuckDB oracle text needs no twin switch: DuckDB's
-# SUM(BIGINT) already accumulates in int128, i.e. the oracle side is
-# always running ITS wide form. Seeded from SPARK_GRAFT_WIDE_SUMS for
-# subprocess benches; toggle in-process with set_wide_sums().
-import os as _os
-
-_WIDE_SUMS = _os.environ.get("SPARK_GRAFT_WIDE_SUMS", "0") == "1"
+# headroom guard, or any deployment's startup probe — flips it once with
+# set_wide_sums() and every money reduction in the engine degrades to the
+# exact-to-1e22 form (~1.6x slower on those aggregates) instead of raising
+# mid-query under ANSI mode. The DuckDB oracle text needs no twin switch:
+# DuckDB's SUM(BIGINT) already accumulates in int128, i.e. the oracle side
+# is always running ITS wide form.
+_WIDE_SUMS = False
 
 
 def set_wide_sums(on: bool) -> bool:
@@ -75,10 +72,6 @@ def set_wide_sums(on: bool) -> bool:
     prev = _WIDE_SUMS
     _WIDE_SUMS = bool(on)
     return prev
-
-
-def wide_sums_enabled() -> bool:
-    return _WIDE_SUMS
 
 
 def _col(col: Column | str) -> Column:
@@ -171,12 +164,6 @@ def stable_sum_wide(col: Column | str, decimal_type: str = _SUM_DECIMAL) -> Colu
     return F.sum(c.cast(decimal_type)).cast("double")
 
 
-def stable_avg_wide(col: Column | str, decimal_type: str = _SUM_DECIMAL) -> Column:
-    """Decimal-accumulator form of :func:`stable_avg`."""
-    c = _col(col)
-    return F.sum(c.cast(decimal_type)).cast("double") / F.count(c)
-
-
 def assert_microunit_headroom(
     df, col: Column | str, scale: int = _SCALE, group_cols: list[str] | None = None
 ) -> float:
@@ -224,16 +211,3 @@ def sql_stable_avg(expr: str, scale: int = _SCALE) -> str:
     """SQL-text twin of :func:`stable_avg` for oracle queries."""
     f = f"{float(10**scale):.1f}"
     return f"SUM(CAST(ROUND(({expr}) * {f}) AS BIGINT)) / ({f} * COUNT(({expr})))"
-
-
-def sql_stable_sum_wide(expr: str, decimal_type: str = _SUM_DECIMAL) -> str:
-    """SQL-text twin of :func:`stable_sum_wide`."""
-    return f"CAST(SUM(CAST(({expr}) AS {decimal_type.upper()})) AS DOUBLE)"
-
-
-def sql_stable_avg_wide(expr: str, decimal_type: str = _SUM_DECIMAL) -> str:
-    """SQL-text twin of :func:`stable_avg_wide`."""
-    return (
-        f"CAST(SUM(CAST(({expr}) AS {decimal_type.upper()})) AS DOUBLE)"
-        f" / COUNT(({expr}))"
-    )

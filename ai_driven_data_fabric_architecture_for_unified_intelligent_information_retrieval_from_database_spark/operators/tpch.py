@@ -330,14 +330,7 @@ _Q5_SUPPFIRST_BYTES_PER_ROW = 640
 def _q5_suppfirst_row_cap(spark) -> int:
     """Effective mid-band row cap (ADVICE r13): derived from the driver
     heap so a small-driver deployment never trades the safe shuffle path
-    for a driver-OOM broadcast; `SPARK_GRAFT_Q5_SUPPFIRST_ROW_CAP`
-    overrides for re-tuned deployments (and for the suite test that
-    forces the branch at test scale)."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_Q5_SUPPFIRST_ROW_CAP")
-    if env:
-        return int(env)
+    for a driver-OOM broadcast."""
     mem = _parse_jvm_mem(spark.conf.get("spark.driver.memory", "1g"))
     return min(_Q5_SUPPFIRST_ROW_CAP, mem // _Q5_SUPPFIRST_BYTES_PER_ROW)
 

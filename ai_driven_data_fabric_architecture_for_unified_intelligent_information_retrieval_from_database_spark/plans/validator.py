@@ -5,16 +5,30 @@ The reference rejects any SQL containing ``drop``/``create``/... *as a
 substring anywhere* (``:301-302`` — which falsely rejects a column named
 ``updated_at``) and requires the literal substring ``employees``
 (``:305-307``). Per SURVEY.md section 4.2 we instead parse the statement
-with Spark's own SQL parser and validate the *logical plan*:
+with Spark's own SQL parser and walk the parsed, unresolved plan as JSON
+(``LogicalPlan.toJSON``: each tree is a pre-order list of nodes with
+``class`` and ``num-children``). The printed ``treeString`` is never read:
+a newline inside a literal, an alias or a quoted identifier prints a
+forged node line there, while in JSON it is only an escaped string.
 
-- every plan node in the parsed tree must be a known pure-query node
-  (allowlist — an unrecognized or future command node is rejected, not
-  silently admitted);
-- every relation referenced must either be in the caller's table allowlist
-  or be a CTE defined in an enclosing scope of that reference. Subquery
-  aliases do NOT excuse a relation: ``FROM (SELECT ...) x`` never produces
-  an ``UnresolvedRelation [x]``, so an alias that shares a name with a
-  non-allowlisted table must not legitimize reading that table.
+- Every plan node must be a known pure-query node (allowlist — an
+  unrecognized or future command node is rejected, not silently admitted).
+- Every relation must be allowlisted by its full multipart name, or be a
+  single-part plain identifier naming a CTE in scope. Scope is exact: the
+  query under a ``WITH`` sees all of its names; CTE body *i* sees the names
+  defined before it, plus its own name only under ``WITH RECURSIVE``
+  (``allowRecursion``). Names in scope are inherited by nested queries,
+  including subquery expressions (their plans sit under a ``plan`` field).
+  Subquery aliases do NOT excuse a relation: ``FROM (SELECT ...) x`` never
+  produces an ``UnresolvedRelation [x]``, so an alias that shares a name
+  with a non-allowlisted table must not legitimize reading that table.
+- The walk fails closed: a missing or ill-typed field, a node left over in
+  a pre-order list, or any ``LogicalPlan`` node in the JSON that the walk
+  did not reach (a plan nested where the walk does not look) rejects the
+  statement.
+
+Validation is parse-only: its verdict depends on nothing but the SQL text
+and the caller's allowlist, never on the catalog or session state.
 
 This is strictly stronger (catches ``SELECT``-prefixed injections the
 substring check misses) and strictly fairer (admits legitimate text that
@@ -24,10 +38,17 @@ must-start-with-SELECT gate are preserved from the reference.
 
 from __future__ import annotations
 
+import json
+import math
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass
+from typing import Any
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
+
+from ..cache import TTLCache
 
 
 class SqlValidationError(ValueError):
@@ -68,11 +89,8 @@ _ALLOWED_NODES = frozenset(
         "Join",
         "SubqueryAlias",
         "UnresolvedSubqueryColumnAliases",
-        # common table expressions (spellings across Spark versions)
-        "CTE",
+        # common table expressions
         "UnresolvedWith",
-        "CTERelationDef",
-        "CTERelationRef",
         # windows / generators / reshaping
         "Window",
         "WithWindowDefinition",
@@ -86,8 +104,6 @@ _ALLOWED_NODES = frozenset(
         "RepartitionByExpression",
     }
 )
-
-_BRACKET_RE = re.compile(r"\[([^\]]*)\]")
 
 
 def strip_markdown_fences(sql: str) -> str:
@@ -103,65 +119,121 @@ class ValidatedSql:
     tables: set[str]
 
 
-@dataclass(frozen=True)
-class _TreeNode:
-    index: int  #: line number within the treeString
-    indent: int  #: column where the node name starts — children indent deeper
-    name: str  #: plan node class name (leading ' stripped)
-    rest: str  #: full node text from the name onward
+#: JVM class name -> whether it is a ``LogicalPlan``. The set of class
+#: names is bounded by the classpath.
+_PLAN_CLASSES = TTLCache(math.inf, 4096)
 
 
-def _parse_tree_nodes(tree: str) -> list[_TreeNode]:
-    """One :class:`_TreeNode` per treeString line.
-
-    ``treeString`` prints exactly one plan node per line, prefixed by
-    tree-drawing characters (``+-``, ``:-``, ``:``, spaces) whose width
-    strictly increases from parent to child — so subtree membership can be
-    recovered by indent comparison without walking JVM objects.
-    """
-    nodes: list[_TreeNode] = []
-    for i, line in enumerate(tree.splitlines()):
-        if not line.strip():
-            continue
-        indent = re.match(r"^[\s:+\-]*", line).end()
-        rest = line[indent:]
-        if rest.startswith("'"):
-            rest = rest[1:]
-        m = re.match(r"[A-Za-z_$][\w$]*", rest)
-        if not m:  # defensive: a line with no node-name-shaped token
-            raise SqlValidationError(f"unrecognized plan line: {line.strip()!r}")
-        nodes.append(_TreeNode(index=i, indent=indent, name=m.group(0), rest=rest))
-    return nodes
+def _is_plan_class(spark: SparkSession, name: str) -> bool:
+    """Whether the JVM class ``name`` is a ``LogicalPlan``."""
+    hit = _PLAN_CLASSES.get(name)
+    if hit is None:
+        jclass = spark._jvm.java.lang.Class
+        plan = jclass.forName("org.apache.spark.sql.catalyst.plans.logical.LogicalPlan")
+        try:
+            hit = plan.isAssignableFrom(jclass.forName(name, False, plan.getClassLoader()))
+        except Py4JError:
+            return True  # a class the JVM cannot load counts as a plan node: fail closed
+        _PLAN_CLASSES.set(name, hit)
+    return hit
 
 
-def _cte_scopes(nodes: list[_TreeNode]) -> list[tuple[int, int, set[str]]]:
-    """``(start, end, names)`` spans in which each CTE definition is in scope.
+def _subquery_plans(value: Any) -> Iterator[list]:
+    """The ``plan`` of every subquery expression (EXISTS, IN, scalar, ...)
+    under ``value``, without descending into those plans or into CTE
+    bodies (which :meth:`_PlanWalk.node` walks in their own scope)."""
+    if isinstance(value, dict):
+        for k, v in value.items():
+            if k == "plan":
+                yield v
+            elif k != "cteRelations":
+                yield from _subquery_plans(v)
+    elif isinstance(value, list):
+        for v in value:
+            yield from _subquery_plans(v)
 
-    A ``CTE [a, b]`` node's names are visible exactly within its subtree
-    (the following lines with greater indent). Names are deliberately NOT
-    collected globally: a CTE defined inside one subquery must not excuse a
-    same-named real-table read elsewhere in the statement.
-    """
-    scopes = []
-    for pos, node in enumerate(nodes):
-        names: set[str] = set()
-        if node.name in ("CTE", "UnresolvedWith"):
-            m = _BRACKET_RE.search(node.rest)
-            if m:
-                names = {p.strip().lower() for p in m.group(1).split(",") if p.strip()}
-        elif node.name == "CTERelationDef":
-            m = re.match(r"CTERelationDef\s+(\w+)", node.rest)
-            if m:
-                names = {m.group(1).lower()}
-        if not names:
-            continue
-        end = node.index
-        for later in nodes[pos + 1 :]:
-            if later.indent <= node.indent:
-                break
-            end = later.index
-        scopes.append((node.index, end, names))
-    return scopes
+
+class _PlanWalk:
+    """One pass over a parsed plan's JSON: checks every node's class and
+    every relation, and counts the nodes it visited."""
+
+    def __init__(self, allowed: set[str]):
+        self.allowed = allowed
+        self.tables: set[str] = set()
+        self.visited = 0
+        self.saw_cte = False
+
+    def plan(self, nodes: list, scope: frozenset[str]) -> None:
+        """Walk one pre-order node list, which must hold exactly one tree."""
+        if self.node(nodes, 0, scope) != len(nodes):
+            raise SqlValidationError("plan JSON has nodes outside its tree")
+
+    def node(self, nodes: list, pos: int, scope: frozenset[str]) -> int:
+        """Walk the subtree rooted at ``nodes[pos]``; returns the position
+        after it. ``scope`` holds the CTE names visible here."""
+        node = nodes[pos]
+        name = node["class"].rsplit(".", 1)[-1]
+        if name not in _ALLOWED_NODES:
+            raise SqlValidationError(f"non-query operation in plan: {name}")
+        self.visited += 1
+        inner = scope
+        if name == "UnresolvedRelation":
+            self.relation(node["multipartIdentifier"], scope)
+        elif name == "UnresolvedWith":
+            self.saw_cte = True
+            for cte in node["cteRelations"]:
+                own = {cte["_1"].lower()}
+                self.plan(cte["_2"], inner | (own if node["allowRecursion"] is True else set()))
+                inner = inner | own
+        for sub in _subquery_plans(node):
+            self.plan(sub, scope)
+        pos += 1
+        for _ in range(node["num-children"]):
+            pos = self.node(nodes, pos, inner)
+        return pos
+
+    def relation(self, ident: str, scope: frozenset[str]) -> None:
+        # Spark prints the multipart name as "[part, part, ...]": [table],
+        # [db, table], or a file source like [parquet, /some/path].
+        # Matching only the last part would let `db.employees` or
+        # parquet.`/x` impersonate an allowlisted `employees`, so a
+        # multipart name must be allowlisted in full, and a single-part
+        # name must be a plain identifier (as every CTE name is). The
+        # string is ambiguous only for a quoted part holding ", ", which
+        # then reads as more parts and needs a full allowlist match.
+        if not (ident.startswith("[") and ident.endswith("]")):
+            raise SqlValidationError(f"unrecognized relation name: {ident!r}")
+        parts = ident[1:-1].lower().split(", ")
+        full = ".".join(parts)
+        if full in self.allowed:
+            self.tables.add(full)
+        elif len(parts) > 1:
+            raise SqlValidationError(f"multipart relation name not allowlisted: {full!r}")
+        elif not re.fullmatch(r"[a-z_][a-z0-9_]*", full):
+            raise SqlValidationError(f"relation name is not a plain identifier: {full!r}")
+        elif full not in scope:
+            raise SqlValidationError(f"references a non-allowlisted table: {full!r}")
+
+
+def _plan_tables(
+    spark: SparkSession, plan_json: str, allowed_tables: set[str] | frozenset[str]
+) -> set[str]:
+    """The allowlisted tables a parsed plan's JSON reads; raises
+    :class:`SqlValidationError` unless the walk admits every node."""
+    objects: list[dict] = []  # every JSON object, in any position
+    walk = _PlanWalk({t.lower() for t in allowed_tables})
+    try:
+        tree = json.loads(plan_json, object_hook=lambda o: objects.append(o) or o)
+        walk.plan(tree, frozenset())
+        plan_nodes = sum(_is_plan_class(spark, o["class"]) for o in objects if "class" in o)
+    except (json.JSONDecodeError, KeyError, TypeError, AttributeError, IndexError,
+            RecursionError) as exc:
+        raise SqlValidationError(f"unexpected plan JSON: {exc!r}") from exc
+    if plan_nodes != walk.visited:
+        raise SqlValidationError("plan has a node the validator did not reach")
+    if not walk.tables and not walk.saw_cte:
+        raise SqlValidationError("query references no known table")
+    return walk.tables
 
 
 def validate_select(
@@ -186,61 +258,7 @@ def validate_select(
         raise SqlValidationError("only SELECT statements are allowed")
 
     try:
-        jparser = spark._jsparkSession.sessionState().sqlParser()
-        plan = jparser.parsePlan(cleaned)
-        tree = plan.treeString()
-    except SqlValidationError:
-        raise
+        plan_json = spark._jsparkSession.sessionState().sqlParser().parsePlan(cleaned).toJSON()
     except Exception as exc:  # parse failure
         raise SqlValidationError(f"SQL does not parse: {exc}") from exc
-
-    nodes = _parse_tree_nodes(tree)
-    for node in nodes:
-        if node.name not in _ALLOWED_NODES:
-            raise SqlValidationError(f"non-query operation in plan: {node.name}")
-
-    scopes = _cte_scopes(nodes)
-    tables: set[str] = set()
-    unknown: set[str] = set()
-    allowed_lower = {t.lower() for t in allowed_tables}
-    for node in nodes:
-        if node.name != "UnresolvedRelation":
-            continue
-        m = _BRACKET_RE.search(node.rest)
-        if not m:
-            continue
-        # UnresolvedRelation prints its multipart name as [part, part, ...]:
-        # [table], [db, table], or a file-source relation like
-        # [parquet, /some/path]. Matching only the last segment would let
-        # `db.employees` / `parquet.`/x,employees`` impersonate an
-        # allowlisted `employees` while reading a different catalog or
-        # file — so a multipart name must be allowlisted as its FULL
-        # dotted form, and a single-part name must be a plain identifier
-        # (CTE names always are, so scope resolution is unaffected).
-        parts = [p.strip() for p in m.group(1).split(",")]
-        full = ".".join(p.lower() for p in parts)
-        if full in allowed_lower:
-            tables.add(full)
-            continue
-        if len(parts) > 1:
-            raise SqlValidationError(
-                f"multipart relation name not allowlisted: {full!r}"
-            )
-        name = parts[0].lower()
-        if not re.fullmatch(r"[a-z_][a-z0-9_]*", name):
-            raise SqlValidationError(
-                f"relation name is not a plain identifier: {name!r}"
-            )
-        in_cte_scope = any(
-            start <= node.index <= end and name in names for start, end, names in scopes
-        )
-        if in_cte_scope:
-            continue
-        tables.add(name)
-        if name not in allowed_lower:
-            unknown.add(name)
-    if unknown:
-        raise SqlValidationError(f"references non-allowlisted tables: {sorted(unknown)}")
-    if not tables and not scopes:
-        raise SqlValidationError("query references no known table")
-    return ValidatedSql(sql=cleaned, tables=tables)
+    return ValidatedSql(sql=cleaned, tables=_plan_tables(spark, plan_json, allowed_tables))

@@ -164,6 +164,19 @@ def test_ttl_cache_culls_at_capacity():
     assert c.get("k9", now=1002.0) == 9
 
 
+def test_ttl_cache_overwrite_at_capacity_culls_nothing():
+    """Overwriting a key at capacity (two concurrent misses of one
+    question) keeps every other entry and makes the key the newest."""
+    c = TTLCache(ttl=1000, max_entries=9)
+    for i in range(9):
+        c.set(f"k{i}", i, now=1000.0)
+    c.set("k0", "new", now=1001.0)
+    assert len(c) == 9
+    c.set("k9", 9, now=1002.0)  # culls the oldest third: k1..k3, not k0
+    assert c.get("k0", now=1003.0) == "new"
+    assert [c.get(f"k{i}", now=1003.0) for i in range(1, 10)] == [None] * 3 + list(range(4, 10))
+
+
 def test_ttl_cache_expired_get_is_thread_safe():
     """Two threads expiring the same key at once: without the cache lock
     both reach the delete, and the loser's KeyError escapes process() —

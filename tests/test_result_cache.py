@@ -37,13 +37,24 @@ def _hit_without_spark(spark, monkeypatch, eng, question):
     def no_validation(*_a, **_k):
         raise AssertionError("a cache hit re-ran validation")
 
-    client = type(spark.sparkContext._gateway._gateway_client)
+    gateway_client = spark.sparkContext._gateway._gateway_client
+    client = type(gateway_client)
     calls = []
     before = _next_job_id(spark)
     # A collector pass inside the window would release dead py4j proxies,
     # which sends the JVM a command the request never made.
     gc.collect()
     gc.disable()
+    # py4j's finalizer thread sends the deletes of released proxies when it
+    # next wakes, up to a second later; send the pending ones now, so none
+    # of them lands inside the window.
+    pending = getattr(gateway_client, "finalizer_deque", None)
+    while pending:
+        try:
+            java_client, target_id = pending.pop()
+        except IndexError:  # the finalizer thread took the last one
+            break
+        java_client.garbage_collect_object(target_id, False)
     try:
         with monkeypatch.context() as m:
             m.setattr(engine_mod, "validate_select", no_validation)

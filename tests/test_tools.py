@@ -1,5 +1,5 @@
-"""Lint for tools/ (the repo has no CI), for the package's parquet reads,
-and the A/B harness's output fingerprint."""
+"""Lint for tools/ (the repo has no CI), for the package's parquet reads
+and environment reads, and the A/B harness's output fingerprint."""
 
 from __future__ import annotations
 
@@ -73,6 +73,48 @@ def test_direct_parquet_reads_are_allowlisted():
             if n:
                 found[os.path.relpath(path, PACKAGE)] = n
     assert found == DIRECT_PARQUET_READS
+
+
+#: The environment variables the package reads, all deployment settings
+#: (where the corpus lives, how many cores, how much memory). A
+#: behaviour switch belongs in code, or in an argument its caller passes.
+DEPLOYMENT_ENV = {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY"}
+
+
+def _env_read_name(node: ast.AST) -> ast.AST | None:
+    """The name argument of ``os.environ.get(...)``, ``os.getenv(...)`` or
+    ``os.environ[...]``, else None."""
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.args:
+        f = node.func
+        if f.attr == "getenv" or (
+            f.attr == "get" and isinstance(f.value, ast.Attribute) and f.value.attr == "environ"
+        ):
+            return node.args[0]
+    if isinstance(node, ast.Subscript) and isinstance(node.value, ast.Attribute):
+        if node.value.attr == "environ":
+            return node.slice
+    return None
+
+
+def test_package_reads_only_deployment_settings_from_env():
+    """Only ``plans/llm_provider.py`` reads a computed name: the API key
+    and URL variables its caller names."""
+    literal, computed = set(), set()
+    for d, _, names in os.walk(PACKAGE):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(d, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                arg = _env_read_name(node)
+                if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                    literal.add(arg.value)
+                elif arg is not None:
+                    computed.add(os.path.relpath(path, PACKAGE))
+    assert literal == DEPLOYMENT_ENV
+    assert computed == {"plans/llm_provider.py"}
 
 
 def test_tools_stay_few():

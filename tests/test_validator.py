@@ -5,10 +5,13 @@ wrong in both directions."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans.validator import (
     SqlValidationError,
+    _plan_tables,
     strip_markdown_fences,
     validate_select,
 )
@@ -191,3 +194,66 @@ def test_fully_qualified_allowlist_entry_passes(spark):
 def test_backquoted_non_identifier_rejected(spark):
     with pytest.raises(SqlValidationError):
         validate_select(spark, "SELECT * FROM `emp loyees`", ALLOWED)
+
+
+#: Each reads `secret` (or no allowlisted table) while its printed plan
+#: tree carries a forged node line: a newline inside a literal, an alias
+#: or a quoted identifier prints text that a line-by-line reading of
+#: ``treeString`` takes for a CTE or relation node.
+FORGED_LINES = [
+    "SELECT * FROM secret WHERE 'x\nCTE [secret]' <> 'y'",
+    "SELECT s AS `a\nCTE [secret]` FROM secret",
+    "SELECT * FROM `secret` AS `q\nCTE [secret]`",
+    "SELECT * FROM range(3) WHERE 'a\nUnresolvedRelation [employees]' <> 'b'",
+    "SELECT * FROM employees WHERE id IN "
+    "(SELECT id FROM secret WHERE 'x\nCTE [secret]' <> 'y')",
+]
+
+#: CTE scope read from indentation: a body reading the real table its own
+#: name shadows, and a body reading a name defined only after it.
+CTE_SCOPE_BYPASSES = [
+    "WITH secret AS (SELECT * FROM secret) SELECT * FROM secret",
+    "WITH a AS (SELECT * FROM secret), secret AS (SELECT 1 x) SELECT * FROM a",
+]
+
+
+@pytest.mark.parametrize("sql", FORGED_LINES + CTE_SCOPE_BYPASSES)
+def test_printed_tree_bypasses_rejected(spark, sql):
+    with pytest.raises(SqlValidationError):
+        validate_select(spark, sql, {"employees"})
+
+
+def test_recursive_cte_body_sees_its_own_name(spark):
+    v = validate_select(
+        spark,
+        "WITH RECURSIVE r AS (SELECT id FROM employees "
+        "UNION ALL SELECT id + 1 FROM r WHERE id < 3) SELECT * FROM r",
+        ALLOWED,
+    )
+    assert v.tables == {"employees"}
+
+
+def test_recursive_cte_body_does_not_see_later_names(spark):
+    """Under WITH RECURSIVE a body still reads a later sibling's name as
+    the catalog table of that name."""
+    with pytest.raises(SqlValidationError, match="secret"):
+        validate_select(
+            spark,
+            "WITH RECURSIVE a AS (SELECT * FROM secret), "
+            "secret AS (SELECT 1 x) SELECT * FROM a",
+            ALLOWED,
+        )
+
+
+@pytest.mark.parametrize("mutate, error", [
+    (lambda j: j.replace('"plan":', '"query":'), "did not reach"),
+    (lambda j: json.dumps(json.loads(j) + json.loads(j)[-1:]), "outside its tree"),
+    (lambda j: j.replace('"[employees]"', "null"), "unexpected plan JSON"),
+    (lambda j: j.replace('"multipartIdentifier":"[employees]",', ""), "unexpected plan JSON"),
+], ids=["plan_under_unknown_field", "leftover_node", "null_name", "missing_name"])
+def test_walk_fails_closed_on_unexpected_plan_json(spark, mutate, error):
+    sql = "SELECT * FROM employees WHERE EXISTS (SELECT 1 FROM employees e)"
+    plan_json = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql).toJSON()
+    assert _plan_tables(spark, plan_json, ALLOWED) == {"employees"}
+    with pytest.raises(SqlValidationError, match=error):
+        _plan_tables(spark, mutate(plan_json), ALLOWED)

@@ -12,7 +12,7 @@ injections it cannot parse); the plan-level validator must fail neither.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans.validator import (
@@ -113,3 +113,40 @@ def test_statement_smuggling_is_never_executable(spark, tail):
         return
     re_out = validate_select(spark, out.sql, TABLES)
     assert re_out.tables <= {t.lower() for t in TABLES}
+
+
+#: Fragments that print forged node lines in a plan's text form.
+FORGE_TEXT = st.lists(
+    st.sampled_from(
+        ["\n", "\r", "[", "]", ",", "'", "`", " ", "+- ", ":- ", "x",
+         "CTE", "UnresolvedRelation", "secret", "employees"]
+    ),
+    min_size=1,
+    max_size=12,
+).map("".join)
+
+
+def _literal(text: str) -> str:
+    return "'" + text.replace("'", "\\'") + "'"
+
+
+def _quoted(text: str) -> str:
+    return "`" + text.replace("`", "``") + "`"
+
+
+@given(lit=FORGE_TEXT, alias=FORGE_TEXT, ident=FORGE_TEXT, sub=st.booleans())
+@settings(**{**_SETTINGS, "max_examples": 100})
+def test_forged_plan_text_never_admits_or_excuses(spark, lit, alias, ident, sub):
+    """Text that looks like plan nodes, inside a literal, a column alias or
+    a quoted table alias, neither admits a non-allowlisted relation nor
+    stops an allowlisted SELECT from validating. (Three backticks in a row
+    are a markdown fence, stripped before parsing, so they are not drawn.)"""
+    where = f"WHERE {_literal(lit)} <> ''"
+    secret = f"SELECT name AS {_quoted(alias)} FROM secret AS {_quoted(ident)} {where}"
+    if sub:
+        secret = f"SELECT * FROM employees WHERE name IN (SELECT * FROM ({secret}) t)"
+    allowed = f"SELECT name AS {_quoted(alias)} FROM employees AS {_quoted(ident)} {where}"
+    assume("```" not in secret + allowed)
+    with pytest.raises(SqlValidationError):
+        validate_select(spark, secret, TABLES)
+    assert validate_select(spark, allowed, TABLES).tables == {"employees"}
