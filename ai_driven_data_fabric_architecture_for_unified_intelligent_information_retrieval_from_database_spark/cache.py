@@ -1,5 +1,6 @@
 """The package's one bounded, locked, least-recently-used cache: the
-engine's result cache and the process-wide catalog and probe caches."""
+engine's result cache, the process-wide catalog caches, the cost gates'
+COUNT-probe memo and PageRank's key-pack verdicts."""
 
 from __future__ import annotations
 

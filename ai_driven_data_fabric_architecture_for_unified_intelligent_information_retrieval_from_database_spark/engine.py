@@ -38,7 +38,6 @@ from collections import deque
 from dataclasses import astuple, dataclass, field
 from datetime import datetime, timezone
 from typing import Any, NamedTuple
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 
@@ -47,7 +46,7 @@ from .functions.serialization import serialize_rows
 from .plans import star_planner
 from .plans.planner import Planner
 from .plans.validator import validate_select
-from .sources.catalog import file_stat, inspect_table
+from .sources.catalog import file_stat, input_signature, inspect_table
 from .sources.connectors import QueryLogBuffer
 
 #: Hard cap on rows materialized at the driver per query. The deterministic
@@ -86,8 +85,8 @@ class CacheEntry(NamedTuple):
     they share one ``data``/``columns`` list."""
 
     payload: dict[str, Any]
-    #: ``(file, size, mtime_ns)`` of the files it read (:func:`_input_stats`)
-    inputs: tuple[tuple[str, int, int], ...]
+    #: ``catalog.input_signature`` of the files it read
+    inputs: tuple[tuple[str, tuple[int, int] | None], ...]
     #: ``time.time()`` of the request that computed it; the TTL counts from here
     created: float
 
@@ -212,7 +211,7 @@ class DataFabricEngine:
         entry = tier.get(key)
         if entry is None:
             return None
-        if any(file_stat(path) != (size, mtime) for path, size, mtime in entry.inputs):
+        if any(file_stat(path) != stat for path, stat in entry.inputs):
             self._count("stale")
             return None
         return entry
@@ -276,7 +275,7 @@ class DataFabricEngine:
         validated arbitrary SELECTs, and an unbounded collect there runs
         out of memory at scale. One sentinel row past the cap distinguishes
         "exactly cap rows" from truncation. Returns ``(columns, rows,
-        truncated, inputs)`` with ``inputs`` from :func:`_input_stats`;
+        truncated, inputs)`` with ``inputs`` the input signature of ``df``;
         failures raise."""
         cap = self.max_result_rows
         columns = df.columns
@@ -284,7 +283,7 @@ class DataFabricEngine:
         # Stat the inputs before the collect, so a file rewritten while it
         # runs fails the next hit's check. Same DataFrame: the collect
         # reuses the plan inputFiles() optimized.
-        inputs = _input_stats(limited)
+        inputs = input_signature(limited)
         rows = [tuple(r) for r in limited.collect()]
         return columns, serialize_rows(columns, rows[:cap]), len(rows) > cap, inputs
 
@@ -374,22 +373,6 @@ def _query_key(planned) -> tuple:
     if operator:
         return ("operator", operator, tuple(planned.operator_args))
     return ("sql", planned.sql)
-
-
-def _input_stats(df) -> tuple[tuple[str, int, int], ...]:
-    """``(file, size, mtime_ns)`` of every local file ``df`` reads: the
-    freshness record of a cached answer. A non-local input is left out, so
-    only the TTL expires answers over it."""
-    out = []
-    for uri in df.inputFiles():
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            continue
-        path = unquote(parsed.path)
-        st = file_stat(path)
-        if st is not None:
-            out.append((path, *st))
-    return tuple(out)
 
 
 #: The reference's canonical 15-question corpus (core/views.py:68-84) — the

@@ -14,6 +14,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.numerics import sql_stable_sum, stable_sum
+from ..plans.costing import fits_broadcast_counted
+from ..sources.catalog import input_digest
+from ..sources.warehouse import (
+    cached_layout,
+    ensure_bucketed_table,
+    prepare_table_location,
+    session_token,
+)
 from .registry import query
 
 #: Bucket count for the incremental CDC family's durable tables. 16 was
@@ -226,7 +234,6 @@ def cdc_merge_incremental(spark, t):
     import time
 
     from .registry import record_phase_split
-    from .scale import _corpus_digest, _session_token, ensure_bucketed_table
 
     o = t["orders"]
     snapshot = o.select(
@@ -246,8 +253,8 @@ def cdc_merge_incremental(spark, t):
     batch2 = _changes_batch2(o).localCheckpoint()
     feed_s = time.perf_counter() - t0
 
-    digest = _corpus_digest(o)
-    tok = _session_token()
+    digest = input_digest(o)
+    tok = session_token()
     base_tbl = f"cdc_base_{digest}_{tok}"
     inc_tbl = f"cdc_inc_{digest}_{tok}"
     # The base-table write is once per corpus per session (amortized
@@ -262,7 +269,6 @@ def cdc_merge_incremental(spark, t):
     t0 = time.perf_counter()
     v1 = _merge_batch(spark.table(base_tbl), batch1)
     from ..sources.sinks import write_bucketed
-    from .scale import prepare_table_location
 
     # Same warehouse hygiene as the base table (review r07): clear a
     # recycled-token leftover and age-prune cdc_inc_* dirs from exited
@@ -371,7 +377,6 @@ def cdc_merge_pruned(spark, t):
     same merge from raw orders."""
     from ..sources.catalog import read_parquet
     from ..sources.sinks import write_partitioned
-    from .scale import _cached_layout, _corpus_digest
 
     o = t["orders"]
     snap = o.select(
@@ -380,8 +385,8 @@ def cdc_merge_pruned(spark, t):
         F.col("o_orderstatus").alias("status"),
         F.year("o_orderdate").alias("o_year"),
     )
-    digest = _corpus_digest(o)
-    path = _cached_layout(
+    digest = input_digest(o)
+    path = cached_layout(
         "/tmp/cdc_orders_by_year_cache",
         digest,
         "orders_by_year",
@@ -437,9 +442,7 @@ def cdc_merge_pruned(spark, t):
     # cdc_merge_apply (tools/cdc_ab.py) because THAT feed scales with the
     # whole corpus; here both sides are partition-bounded, which is the
     # point of the layout.
-    from .relational import _fits_broadcast_counted
-
-    if _fits_broadcast_counted(spark, feed):
+    if fits_broadcast_counted(spark, feed):
         nonins = feed.where(F.col("op") != "I").select(
             F.col("key").alias("f_key"),
             "op",

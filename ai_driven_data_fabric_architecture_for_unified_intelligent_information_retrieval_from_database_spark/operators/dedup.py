@@ -118,7 +118,7 @@ MINHASH_VERIFY_THRESHOLD = 0.5
 #: (``jpairs``: a_id < b_id, n_common, jaccard >= threshold). Used verbatim
 #: by the pair-list oracle and as the edge source of the
 #: connected-components oracle below.
-_PAIR_CTES = f"""w AS (SELECT doc_id, STRING_SPLIT(text, ' ') AS ws FROM documents),
+PAIR_CTES = f"""w AS (SELECT doc_id, STRING_SPLIT(text, ' ') AS ws FROM documents),
         ii AS (SELECT doc_id, ws,
                       UNNEST(GENERATE_SERIES(1, GREATEST(LEN(ws) - 2, 1))) AS i
                FROM w),
@@ -182,7 +182,7 @@ def _jaccard_pair_df(t) -> DataFrame:
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-        WITH {_PAIR_CTES}
+        WITH {PAIR_CTES}
         SELECT a_id, b_id, n_common, jaccard FROM jpairs
     """,
     covers="pipeline: near-dup detection, exact 3-gram Jaccard (LSH ground truth)",
@@ -202,7 +202,7 @@ def dedup_ngram_jaccard(spark, t):
 @query(
     "dedup_components",
     oracle=f"""
-        WITH RECURSIVE {_PAIR_CTES},
+        WITH RECURSIVE {PAIR_CTES},
         vp AS (SELECT a_id, b_id FROM jpairs
                WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}),
         edges AS (
@@ -261,7 +261,7 @@ def dedup_components(spark, t):
 @query(
     "dedup_components_star",
     oracle=f"""
-        WITH RECURSIVE {_PAIR_CTES},
+        WITH RECURSIVE {PAIR_CTES},
         vp AS (SELECT a_id, b_id FROM jpairs
                WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}),
         edges AS (
@@ -302,7 +302,7 @@ def dedup_components_star(spark, t):
 @query(
     "dedup_cluster_representatives",
     oracle=f"""
-        WITH RECURSIVE {_PAIR_CTES},
+        WITH RECURSIVE {PAIR_CTES},
         vp AS (SELECT a_id, b_id FROM jpairs
                WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}),
         edges AS (
@@ -642,14 +642,14 @@ def minhash_signatures(t, with_sets: bool = False) -> DataFrame:
 # (MINHASH_VERIFY_THRESHOLD is defined at the top of the module, next to
 # JACCARD_THRESHOLD — the components/representatives oracles interpolate it.)
 
-# The registered oracle reuses _PAIR_CTES, whose jpairs CTE is pre-filtered
+# The registered oracle reuses PAIR_CTES, whose jpairs CTE is pre-filtered
 # at JACCARD_THRESHOLD — tightening to the verify threshold on top is only
 # correct while verify >= ground-truth. Lowering the verify knob below 0.4
 # requires a standalone oracle again.
 assert MINHASH_VERIFY_THRESHOLD >= JACCARD_THRESHOLD
 
 
-def _band_buckets(sig) -> DataFrame:
+def band_buckets(sig) -> DataFrame:
     """One slim (doc_id, sz, band_idx, band_key) relation via posexplode
     over the banded signature columns — shared by the full self-join LSH
     and the incremental delta-vs-base form. The shuffle carries 4 small
@@ -677,7 +677,7 @@ def _band_buckets(sig) -> DataFrame:
     # reproduce (no xxhash64). The equality contract therefore doubles as
     # a total-recall gate on the banding; see the docstring.
     oracle=f"""
-        WITH {_PAIR_CTES}
+        WITH {PAIR_CTES}
         SELECT a_id, b_id, jaccard FROM jpairs
         WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
     """,
@@ -733,7 +733,7 @@ def lsh_verified_pairs(t) -> DataFrame:
     rather than re-deriving pairs. See dedup_minhash_lsh for the plan
     notes and measured trades."""
     sig = minhash_signatures(t, with_sets=True)
-    buckets = _band_buckets(sig)
+    buckets = band_buckets(sig)
     a_b = buckets.select(
         F.col("doc_id").alias("a_id"), F.col("sz").alias("a_sz"),
         "band_idx", "band_key",
@@ -775,7 +775,7 @@ def lsh_verified_pairs(t) -> DataFrame:
 @query(
     "dedup_cross_source_matrix",
     oracle=f"""
-        WITH {_PAIR_CTES},
+        WITH {PAIR_CTES},
         vp AS (SELECT a_id, b_id, jaccard FROM jpairs
                WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}),
         lab AS (
@@ -997,13 +997,13 @@ def dedup_simhash(spark, t):
 
 
 def _embedding_dedup_oracle() -> str:
-    from .similarity import _sql_bucket_terms, _sql_params_cte
+    from .similarity import sql_bucket_terms, sql_params_cte
 
     return f"""
-        WITH {_sql_params_cte()},
+        WITH {sql_params_cte()},
         b AS (
             SELECT e.vec_id, e.label, e.embedding,
-                   CAST({_sql_bucket_terms()} AS BIGINT) AS bucket
+                   CAST({sql_bucket_terms()} AS BIGINT) AS bucket
             FROM embeddings e, params p
         ),
         probes AS (
@@ -1082,7 +1082,7 @@ def dedup_embedding_cosine(spark, t):
 @query(
     "dedup_minhash_incremental",
     oracle=f"""
-        WITH {_PAIR_CTES}
+        WITH {PAIR_CTES}
         SELECT CASE WHEN a_id % 5 = 0 THEN a_id ELSE b_id END AS delta_id,
                CASE WHEN a_id % 5 = 0 THEN b_id ELSE a_id END AS base_id,
                jaccard
@@ -1115,7 +1115,7 @@ def dedup_minhash_incremental(spark, t):
     (delta, base) pairs, and any pair the banding misses is a row-count
     mismatch, not an unverifiable claim."""
     sig = minhash_signatures(t, with_sets=True)
-    buckets = _band_buckets(sig)
+    buckets = band_buckets(sig)
     is_delta = F.col("doc_id") % 5 == 0
     delta_b = buckets.where(is_delta).select(
         F.col("doc_id").alias("delta_id"), F.col("sz").alias("d_sz"),

@@ -11,8 +11,13 @@ applied to an iterative algorithm.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
+from ..cache import TTLCache
+from ..plans.costing import plan_size_estimate
+from ..sources.catalog import input_signature, signature_digest
 from .registry import query
 
 #: Fixed damping (85/100) and rank scale (1e12 micro-units) — integers only.
@@ -238,8 +243,6 @@ def graph_pagerank_parts(spark, t):
         # count is the session's shuffle parallelism, so the shape holds
         # at cluster scale.
         pairs = baskets.select(F.explode(packed_pairs).alias("pk"))
-        from .relational import plan_size_estimate
-
         if plan_size_estimate(t["lineitem"]) < _VEC_ROLLUP_MIN_BYTES:
             # Small corpus: the Python-worker spin-up for the vectorized
             # kernel (~0.3 s) exceeds the whole hash rollup; keep the
@@ -468,14 +471,19 @@ def copurchase_pair_counts(lineitem=None, min_support: int = 1, baskets=None):
     return out
 
 
-#: Cache for :func:`_partkey_packable`, keyed on the source files'
-#: content signature (path, size, mtime — scale.py's _corpus_digest
-#: discipline), NOT paths alone: a corpus regenerated in place at the
+#: Bound on the memoized :func:`_partkey_packable` verdicts (one entry
+#: per probed lineitem corpus).
+PACKABLE_CACHE_MAX_ENTRIES = 256
+
+#: Cache for :func:`_partkey_packable`, keyed on the digest of the source
+#: files' input signature (``catalog.input_signature``: path, size,
+#: mtime), NOT paths alone: a corpus regenerated in place at the
 #: same paths with partkeys >= 2^31 must re-probe, or a stale True
 #: verdict would re-enable the packed-key path and silently corrupt
 #: pairs — exactly the overflow hazard the guard exists to prevent.
 #: The footer probe is cheap (~ms) but bench passes re-run the query.
-_PACKABLE_CACHE: dict[str, bool] = {}
+#: Bounded and locked: operator routes run on concurrent HTTP threads.
+_PACKABLE_CACHE = TTLCache(math.inf, PACKABLE_CACHE_MAX_ENTRIES)
 
 
 def _partkey_packable(lineitem) -> bool:
@@ -489,27 +497,23 @@ def _partkey_packable(lineitem) -> bool:
     False and the caller takes the struct-key rollup — the r06 verdict's
     silent-corruption hazard, now a plan choice.
     """
-    files = tuple(sorted(lineitem.inputFiles()))
+    signature = input_signature(lineitem)
     # Only file-backed frames are cacheable: an in-memory frame reports
     # no input files, and an empty key would alias every such frame.
     digest = None
-    if files:
-        from .scale import _corpus_digest
-
-        digest = _corpus_digest(lineitem)
+    if signature:
+        digest = signature_digest(signature)
         cached = _PACKABLE_CACHE.get(digest)
         if cached is not None:
             return cached
     ok = None
     try:
         import pyarrow.parquet as pq
-        from urllib.parse import unquote, urlparse
 
-        if not files:  # in-memory frame: nothing to probe, ask Spark
+        if not signature:  # in-memory frame: nothing to probe, ask Spark
             raise ValueError("no parquet inputs")
         hi = 0
-        for uri in files:
-            path = unquote(urlparse(uri).path) or uri
+        for path, _ in signature:
             meta = pq.ParquetFile(path).metadata
             idx = {
                 meta.schema.column(i).name: i for i in range(meta.num_columns)
@@ -533,7 +537,7 @@ def _partkey_packable(lineitem) -> bool:
             and row["mx"] < (1 << 31)
         )
     if digest is not None:
-        _PACKABLE_CACHE[digest] = ok
+        _PACKABLE_CACHE.set(digest, ok)
     return ok
 
 

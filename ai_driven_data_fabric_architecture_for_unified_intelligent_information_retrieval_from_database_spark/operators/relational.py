@@ -21,8 +21,6 @@ Scale notes, applied throughout:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
 from ..functions.numerics import (
@@ -32,11 +30,8 @@ from ..functions.numerics import (
     stable_avg,
     stable_sum,
 )
-from ..cache import TTLCache
+from ..plans.costing import fits_broadcast, fits_broadcast_counted
 from .registry import query
-
-#: Bound on the memoized COUNT probes (one entry per probed slice).
-PROBE_CACHE_MAX_ENTRIES = 1024
 
 # ---------------------------------------------------------------------------
 # Scans / projections (S1, S3, P1-P4, O1, O4)
@@ -508,163 +503,6 @@ def join_anti(spark, t):
     )
 
 
-def _parse_byte_conf(raw: str) -> int:
-    """Parse Spark's byte-string conf forms: plain ints, '10485760b',
-    '50MB', '1g' (case-insensitive, Spark's binary units). ADVICE r03:
-    ``int(...)`` alone raises on the human-readable forms Spark itself
-    renders, silently falling back to a hardcoded default."""
-    s = raw.strip().lower()
-    units = {
-        "tb": 1 << 40, "t": 1 << 40,
-        "gb": 1 << 30, "g": 1 << 30,
-        "mb": 1 << 20, "m": 1 << 20,
-        "kb": 1 << 10, "k": 1 << 10,
-        "b": 1,
-    }
-    for suffix, mult in units.items():
-        if s.endswith(suffix) and s[: -len(suffix)].lstrip("-").isdigit():
-            return int(s[: -len(suffix)]) * mult
-    return int(s)  # plain integer (may still raise: caller decides fallback)
-
-
-def _broadcast_threshold(spark) -> int:
-    """The session broadcast threshold in bytes, with a WARNED 10 MB
-    fallback on unparseable forms — shared by both fitness checks so the
-    silent-fallback bug ADVICE r03 flagged cannot re-grow in one of them."""
-    try:
-        return _parse_byte_conf(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        )
-    except Exception:
-        import warnings
-
-        warnings.warn(
-            "unparseable spark.sql.autoBroadcastJoinThreshold; "
-            "falling back to 10MB for the cost-based plan choice"
-        )
-        return 10 * 1024 * 1024
-
-
-def plan_size_estimate(df) -> int:
-    """Catalyst's pre-AQE size estimate (bytes) for a DataFrame's optimized
-    plan — the one py4j incantation every cost-based form choice in this
-    package shares (broadcast fitness here, the q5 orders-slice gate in
-    tpch.py, the small-corpus rollup gate in graph.py)."""
-    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-
-
-def _fits_broadcast(spark, df) -> bool:
-    """Catalyst's own pre-AQE size estimate for ``df`` against the session
-    broadcast threshold — the same comparison the planner makes."""
-    thr = _broadcast_threshold(spark)
-    if thr <= 0:
-        return False
-    return plan_size_estimate(df) <= thr
-
-
-#: Borderline band for :func:`_fits_broadcast_counted`: when the static
-#: estimate lands within this factor of the threshold, one cheap COUNT
-#: settles the decision; beyond it the fallback plan is taken without
-#: paying the probe.
-_PROBE_SLACK = 8
-
-#: Row cap on counted broadcast decisions. Fitting under the BYTE
-#: threshold is not sufficient: the driver builds the broadcast hash
-#: relation single-threaded at a few million rows per second, so past
-#: ~1.5 M build rows the build wall-time exceeds the exchange it avoids
-#: even when the bytes fit — measured on Q22's urgent-custkey anti build
-#: side at sf10 (3 M keys, 24 MB: broadcast form 1.40 s vs shuffle form
-#: 0.93 s min-of-3 idle), while the ~0.9 M-row Q3/Q5 slices stay
-#: comfortably on the winning side of the cap (their broadcast forms
-#: measured faster in r04/r05 isolation runs).
-_BCAST_BUILD_ROW_CAP = 1_500_000
-
-
-def _fits_broadcast_counted(spark, df) -> bool:
-    """Broadcast-fitness check with a runtime-statistics fallback.
-
-    Spark's simple (non-CBO) estimator propagates a scan's sizeInBytes
-    through Filter and Join nodes unchanged, so a date-window + semi-join
-    reduction that keeps ~1/5 of the rows still reports the full scan
-    size — measured at sf10: the Q3 qualifying-orders slice is ~16 MB on
-    the wire but estimated at 71 MB, pushing it past the 64 MB threshold
-    and forcing the shuffle plan exactly where the broadcast one is 1.6x
-    faster. Real optimizers close this gap with column statistics; this
-    helper closes it with the cheapest runtime statistic there is:
-
-    - estimate <= threshold: broadcast (same as :func:`_fits_broadcast`);
-    - estimate > ``_PROBE_SLACK`` x threshold: fallback, no probe — at
-      that distance no plausible filter selectivity rescues the broadcast,
-      and the probe itself would scan a too-large input;
-    - in between: run ``df.count()`` (filters push into the scan, so the
-      probe reads only the pruned columns) and compare rows x per-row
-      defaultSize against the threshold. The probe costs one counting
-      job over the already-filtered slice (~0.15-0.3 s at sf10) and only
-      runs in the borderline decade; at small SF the static estimate
-      already fits and at huge SF the slack bound skips straight to the
-      scalable plan.
-    """
-    thr = _broadcast_threshold(spark)
-    if thr <= 0:
-        return False
-    plan = df._jdf.queryExecution().optimizedPlan()
-    est = int(str(plan.stats().sizeInBytes()))
-    # Catalyst's per-type defaultSize, mirrored (PySpark type objects do
-    # not expose it): fixed-width primitives by width, strings at the
-    # 20-byte planning default.
-    widths = {
-        "boolean": 1, "byte": 1, "short": 2, "integer": 4, "float": 4,
-        "date": 4, "long": 8, "double": 8, "timestamp": 8,
-        "timestamp_ntz": 8, "string": 20,
-    }
-    row_bytes = max(
-        8, sum(widths.get(f.dataType.typeName(), 32) for f in df.schema.fields)
-    )
-    if est <= thr and est // row_bytes <= _BCAST_BUILD_ROW_CAP:
-        # Bytes fit AND the bytes-implied row count clears the build cap;
-        # narrow key relations (e.g. Q22's single-long urgent-custkey
-        # column: 47 MB estimated, 3 M actual rows) fall through to the
-        # counted path instead — byte-fitness alone hid a driver hash
-        # build slower than the exchange it avoided.
-        return True
-    if est > _PROBE_SLACK * thr:
-        return False
-    n = _counted_probe(df, plan, est)
-    return n <= _BCAST_BUILD_ROW_CAP and n * row_bytes <= thr
-
-
-#: Memoized COUNT probes (r05 brief / r06 task 3a): within a process the
-#: same borderline slice is probed once, not once per bench pass — the
-#: probe job is untimed but still burned ~0.2-0.3 s of wall clock per
-#: construction at sf10. Keyed on the exprId-normalized optimized plan
-#: plus the size estimate PLUS the source files' content signature
-#: (path, size, mtime — scale.py's _corpus_digest): plan text + byte
-#: estimate alone would serve a stale row count for a corpus rewritten
-#: in place at an identical byte size, silently flipping the
-#: broadcast-vs-shuffle choice for the rest of the process (r07 advice).
-#: Bounded and locked: operator routes probe from concurrent HTTP threads.
-_PROBE_COUNT_CACHE = TTLCache(math.inf, PROBE_CACHE_MAX_ENTRIES)
-
-
-def _counted_probe(df, plan, est: int) -> int:
-    import hashlib
-    import re
-
-    from .scale import _corpus_digest
-
-    text = re.sub(r"#\d+", "#", plan.toString())
-    try:
-        src = _corpus_digest(df)
-    except Exception:
-        src = ""
-    key = hashlib.md5(f"{est}\n{src}\n{text}".encode()).hexdigest()
-    n = _PROBE_COUNT_CACHE.get(key)
-    if n is None:
-        n = df.count()
-        _PROBE_COUNT_CACHE.set(key, n)
-    return n
-
-
 @query(
     "join_star_flagship",
     oracle=f"""
@@ -712,7 +550,7 @@ def join_star_flagship(spark, t):
     """
     l, o, c = t["lineitem"], t["orders"], t["customer"]
     n, r = t["nation"], t["region"]
-    if _fits_broadcast(spark, o.select("o_orderkey", "o_custkey")):
+    if fits_broadcast(spark, o.select("o_orderkey", "o_custkey")):
         return (
             l.join(o, l.l_orderkey == o.o_orderkey)
             .join(c, o.o_custkey == c.c_custkey)
@@ -733,7 +571,7 @@ def join_star_flagship(spark, t):
         F.count("*").alias("n_items"),
     )
     cs = c.select("c_custkey", "c_mktsegment", "c_nationkey")
-    if _fits_broadcast_counted(spark, cs):
+    if fits_broadcast_counted(spark, cs):
         return (
             per_order.join(
                 o.select("o_orderkey", "o_custkey"),

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from ..functions.numerics import sql_stable_sum
 from ..functions.skew import salted_group_count, salted_join_counts
+from ..sources.catalog import input_digest
+from ..sources.warehouse import cached_layout, ensure_bucketed_table, session_token
 from .registry import query
 
 
@@ -115,8 +117,8 @@ def partition_pruned_daily_read(spark, t):
     from ..sources.sinks import write_partitioned
 
     day_events = t["events"].withColumn("day", F.col("ts").cast("date"))
-    digest = _corpus_digest(t["events"])
-    path = _cached_layout(
+    digest = input_digest(t["events"])
+    path = cached_layout(
         "/tmp/events_by_day_cache",
         digest,
         "events_by_day",
@@ -168,8 +170,8 @@ def layout_zorder_box_read(spark, t):
     from ..sources.sinks import write_zordered
 
     ev = t["events"]
-    digest = _corpus_digest(ev)
-    path = _cached_layout(
+    digest = input_digest(ev)
+    path = cached_layout(
         "/tmp/events_zorder_cache",
         digest,
         "events_zorder",
@@ -442,300 +444,6 @@ def sampling_stratified_quota(spark, t):
     )
 
 
-#: Minimum age before an orphaned cache digest may be pruned. A sibling
-#: digest that is minutes old is plausibly ANOTHER live session's cache
-#: (parallel test + bench runs share /tmp) — rmtree'ing it mid-scan fails
-#: that session's query. An hour-old orphan is a regenerated corpus's
-#: leftover; pruning those still bounds disk growth.
-_PRUNE_MIN_AGE_S = 3600
-
-
-def _cached_layout(root: str, digest: str, leaf: str, write_fn) -> str:
-    """Digest-keyed layout cache under ``root``: returns ``root/digest/leaf``,
-    invoking ``write_fn(path)`` once when no completed copy (_SUCCESS) is
-    there, and age-prunes orphaned sibling digests (see _PRUNE_MIN_AGE_S).
-    One implementation for every cached-layout operator in this module —
-    the protocol (freshness key, completion marker, prune policy) must not
-    drift between them."""
-    import os
-    import shutil
-    import time
-
-    path = os.path.join(root, digest, leaf)
-    digest_dir = os.path.join(root, digest)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        if os.path.isdir(root):
-            now = time.time()
-            for d in os.listdir(root):
-                full = os.path.join(root, d)
-                try:
-                    old_enough = now - os.path.getmtime(full) > _PRUNE_MIN_AGE_S
-                except OSError:
-                    continue
-                if d != digest and old_enough:
-                    shutil.rmtree(full, ignore_errors=True)
-        write_fn(path)
-    else:
-        # Touch the digest dir on every hit so its mtime is a LAST-USE
-        # stamp, not a write stamp: without this a >1h session still
-        # reading its cache can have it pruned by a concurrent session
-        # holding a different corpus digest (ADVICE r04).
-        try:
-            os.utime(digest_dir, None)
-        except OSError:
-            pass
-    return path
-
-
-_EXIT_CLEANUP_WAREHOUSES: set[str] = set()
-
-
-def _register_exit_cleanup(warehouse: str) -> None:
-    """Remove THIS process's token-suffixed warehouse tables at interpreter
-    exit (r07 verdict item 6: every exited pytest/bench/driver process left
-    its bk_*/cdc_* dirs behind, waiting for some FUTURE process to age-prune
-    them — 26 leftover dirs after one working day). The metastore is
-    per-session, so the directories are the only persistent state; rmtree
-    is the complete cleanup. The 1h age-prune in
-    :func:`prepare_table_location` stays as the backstop for SIGKILLed
-    processes. ONLY this process's token-suffixed dirs are touched:
-    shared cwd files (derby.log, metastore_db) are deliberately left
-    alone — a concurrent sibling session in the same cwd may still hold
-    its Derby catalog open, and the first process to exit deleting it
-    would corrupt the survivor (r08 review finding); those files are
-    gitignored instead."""
-    if warehouse in _EXIT_CLEANUP_WAREHOUSES:
-        return
-    _EXIT_CLEANUP_WAREHOUSES.add(warehouse)
-    import atexit
-    import glob
-    import os
-    import shutil
-
-    token = _session_token()
-
-    def _cleanup(warehouse=warehouse, token=token) -> None:
-        for d in glob.glob(os.path.join(warehouse, f"*_{token}")):
-            shutil.rmtree(d, ignore_errors=True)
-
-    atexit.register(_cleanup)
-
-
-def prune_stale_warehouse(warehouse: str | None = None) -> int:
-    """Prune dead processes' token-suffixed warehouse dirs AT STARTUP.
-
-    The atexit cleanup (:func:`_register_exit_cleanup`) handles graceful
-    exits and the in-write age-prune (:func:`prepare_table_location`)
-    handles long sessions, but a SIGKILLed predecessor's ``bk_*``/``cdc_*``
-    dirs survive a whole later session if that session never happens to
-    write the same table family (r08 verdict item 7). Called once from
-    conftest/bench startup: a dir whose embedded pid is DEAD is residue
-    and goes immediately; a dir whose pid is alive (another live session,
-    or a recycled pid) is NEVER pruned here — parquet dir mtimes do not
-    advance on read, so an age guard would race a live >1h session that
-    still queries a table it wrote at startup (ADVICE r09). The in-write
-    family prune (:func:`prepare_table_location`) applies the same
-    dead-pid test (ADVICE r10), so live-pid residue under a recycled pid
-    is simply carried until that unrelated process exits and a later
-    startup lands here. Returns the number of dirs removed."""
-    import os
-    import re
-    import shutil
-
-    if warehouse is None:
-        warehouse = os.path.join(os.getcwd(), "spark-warehouse")
-    if not os.path.isdir(warehouse):
-        return 0
-    token_re = re.compile(r"_(\d+)_[0-9a-f]{6}$")
-    removed = 0
-    for d in os.listdir(warehouse):
-        m = token_re.search(d)
-        if not m or int(m.group(1)) == os.getpid():
-            continue
-        if not _token_pid_alive(d):
-            shutil.rmtree(os.path.join(warehouse, d), ignore_errors=True)
-            removed += 1
-    return removed
-
-
-def warehouse_scratch_root(spark, family: str) -> str:
-    """Per-process scratch root INSIDE the Spark warehouse directory — the
-    home for streaming state and staged feed layouts (r09 verdict item 2:
-    ``/tmp`` paths are driver-local on a real cluster, so executor-written
-    parquet under them lands on per-machine disks and the driver's read
-    back fails; the warehouse is a root executors share wherever the
-    managed tables work at all). SCOPE (ADVICE r10): this implementation
-    creates the directory with driver-local ``os.makedirs`` on the
-    urlparse'd path, so the claim holds for shared-POSIX warehouses
-    (NFS/Lustre/local[*]) — the deployments this repo's vanilla-parquet
-    tables target. An ``hdfs://``/``s3a://`` warehouse needs the Hadoop
-    FileSystem API for the mkdir and scheme-preserving paths; that port
-    is mechanical (py4j ``FileSystem.get(...).mkdirs``) but untestable
-    here, so it is documented rather than half-shipped. The dir name
-    carries the per-process token, so the existing exit cleanup removes
-    it on graceful exit and :func:`prune_stale_warehouse` removes
-    dead-pid residue at the next startup — streaming scratch follows
-    exactly the lifecycle the ``cdcsb_*`` tables do."""
-    import os
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    _register_exit_cleanup(warehouse)
-    root = os.path.join(warehouse, f"{family}_{_session_token()}")
-    os.makedirs(root, exist_ok=True)
-    return root
-
-
-def warehouse_scratch_dir(spark, family: str) -> str:
-    """A fresh per-invocation directory under this process's
-    :func:`warehouse_scratch_root` (the tempfile.mkdtemp replacement for
-    state that must outlive the creating function — the whole root is
-    exit-cleaned, so no per-dir atexit registration is needed)."""
-    import os
-    import uuid
-
-    d = os.path.join(
-        warehouse_scratch_root(spark, family), uuid.uuid4().hex[:12]
-    )
-    os.makedirs(d)
-    return d
-
-
-def _session_token() -> str:
-    """Per-process suffix for warehouse table names: two concurrent
-    sessions sharing the repo-local warehouse can never write (or delete)
-    each other's live tables because they never share a name. The pid is
-    human-debuggable; the random tail covers pid recycling across
-    restarts within the prune window."""
-    import os
-
-    global _SESSION_TOKEN
-    if _SESSION_TOKEN is None:
-        import uuid
-
-        _SESSION_TOKEN = f"{os.getpid()}_{uuid.uuid4().hex[:6]}"
-    return _SESSION_TOKEN
-
-
-_SESSION_TOKEN: str | None = None
-
-
-def _corpus_digest(*dfs) -> str:
-    """Digest of the source files' (path, size, mtime) across every given
-    DataFrame — the freshness key shared by every cached-layout operator
-    here (see partition_pruned_daily_read for why names alone are not
-    enough; a multi-table consumer must key on ALL its inputs or a
-    regenerated second table is served stale). Each file's (size, mtime)
-    comes from the catalog's file-signature helper, the key its schema
-    cache uses too."""
-    import hashlib
-    from urllib.parse import urlparse
-
-    from ..sources.catalog import file_stat
-
-    def sig(uri: str) -> str:
-        st = file_stat(urlparse(uri).path or uri)
-        return uri if st is None else f"{uri}\t{st[0]}\t{st[1]}"
-
-    files = sorted(sig(f) for df in dfs for f in df.inputFiles())
-    return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
-
-
-def ensure_bucketed_table(
-    spark, table: str, df, key: str, digest: str, n_buckets: int = 16
-) -> None:
-    """Write ``df`` as a bucketed managed table once per session, with the
-    collision/pruning discipline bucketed_join_revenue established:
-
-    The metastore is per-session but the warehouse directory is not.
-    Table names carry a per-PROCESS token (see :func:`_session_token`),
-    so no two live sessions can ever collide on a location — which
-    removes the unguarded same-name rmtree ADVICE r04 flagged (a
-    concurrent session's live table could be deleted mid-query). A
-    leftover location under OUR name means a dead previous process with
-    a recycled pid-token: cleared only then. Orphaned same-family tables
-    (old digests, exited sessions) are pruned age-guarded so repeated
-    cycles don't grow the warehouse.
-    """
-    import os
-    from urllib.parse import urlparse
-
-    from ..sources.sinks import write_bucketed
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    location = f"{warehouse}/{table.lower()}"
-    if spark.catalog.tableExists(table):
-        try:  # last-use stamp, shields it from other sessions' pruning
-            os.utime(location, None)
-        except OSError:
-            pass
-        return
-    prepare_table_location(spark, table, table.split(digest)[0].lower())
-    write_bucketed(df, table, key, n_buckets=n_buckets, sort_col=key)
-
-
-def _token_pid_alive(dirname: str) -> bool:
-    """Whether a ``*_{pid}_{hex6}`` warehouse dir's embedded pid is a live
-    process. Unparseable names and EPERM both report alive — the safe
-    default for anything a prune loop is deciding whether to delete."""
-    import os
-    import re
-
-    m = re.search(r"_(\d+)_[0-9a-f]{6}$", dirname)
-    if not m:
-        return True
-    try:
-        os.kill(int(m.group(1)), 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except OSError:
-        return True
-
-
-def prepare_table_location(spark, table: str, family_prefix: str) -> None:
-    """Warehouse hygiene for a per-process table name about to be written
-    (the ensure_bucketed_table discipline, reusable by any writer of
-    ``{family}_{digest}_{token}`` tables): clear a leftover location under
-    OUR name (only a dead previous process with a recycled token can have
-    left it), and prune orphaned same-family siblings so repeated cycles
-    don't grow the shared warehouse (review r07: the CDC incremental
-    target's tables previously skipped both steps and accumulated
-    forever). A sibling is pruned only if its embedded pid is DEAD *and*
-    it is stale by mtime — the age guard alone raced a live >1h session
-    that wrote a table once and has only been reading it, since
-    ``spark.table`` reads never advance the dir mtime (ADVICE r10).
-    Live-pid residue from a recycled pid therefore survives this prune,
-    but only until that unrelated process exits — the next startup's
-    :func:`prune_stale_warehouse` then removes it."""
-    import os
-    import shutil
-    import time
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    _register_exit_cleanup(warehouse)
-    location = f"{warehouse}/{table.lower()}"
-    if os.path.isdir(location) and not spark.catalog.tableExists(table):
-        shutil.rmtree(location)
-    if os.path.isdir(warehouse):
-        now = time.time()
-        for d in os.listdir(warehouse):
-            full = os.path.join(warehouse, d)
-            try:
-                old_enough = now - os.path.getmtime(full) > _PRUNE_MIN_AGE_S
-            except OSError:
-                continue
-            if (
-                d.startswith(family_prefix)
-                and d != table.lower()
-                and old_enough
-                and not _token_pid_alive(d)
-            ):
-                spark.sql(f"DROP TABLE IF EXISTS {d}")
-                shutil.rmtree(full, ignore_errors=True)
-
-
 #: Bucket count for the recurring-join layout (r14). The r13 sf30
 #: leg's 5.09x reading reproduced same-minute at idle (5.45x) — NOT
 #: load skew: the cell still built its layout with the 16-bucket
@@ -793,14 +501,14 @@ def bucketed_join_revenue(spark, t):
     from ..functions.numerics import stable_sum
 
     orders, cust = t["orders"], t["customer"]
-    digest = _corpus_digest(orders, cust)
+    digest = input_digest(orders, cust)
 
     def ensure(table, df, key):
         ensure_bucketed_table(
             spark, table, df, key, digest, n_buckets=_BJR_N_BUCKETS
         )
 
-    tok = _session_token()
+    tok = session_token()
     to, tc = f"bk_orders_{digest}_{tok}", f"bk_customer_{digest}_{tok}"
     ensure(to, orders.select("o_custkey", "o_totalprice"), "o_custkey")
     ensure(tc, cust.select("c_custkey", "c_mktsegment"), "c_custkey")
@@ -843,8 +551,8 @@ def source_orc_roundtrip(spark, t):
     from ..sources.connectors import read_table
 
     sup = t["supplier"]
-    digest = _corpus_digest(sup)
-    path = _cached_layout(
+    digest = input_digest(sup)
+    path = cached_layout(
         "/tmp/orc_roundtrip_cache",
         digest,
         "supplier_orc",
@@ -884,7 +592,7 @@ def source_schema_evolution(spark, t):
     table. The status=NULL group is the v1 rowset — non-vacuous at every
     SF."""
     o = t["orders"]
-    digest = _corpus_digest(o)
+    digest = input_digest(o)
 
     def write_two_versions(p):
         v1 = o.where(F.col("o_orderkey") % 2 == 0).select(
@@ -896,7 +604,7 @@ def source_schema_evolution(spark, t):
         v1.write.mode("overwrite").parquet(p)
         v2.write.mode("append").parquet(p)
 
-    path = _cached_layout(
+    path = cached_layout(
         "/tmp/schema_evolution_cache", digest, "orders_two_schemas",
         write_two_versions,
     )

@@ -85,7 +85,7 @@ def multiprobe_buckets(
     )
 
 
-def _sql_params_cte(table: str = "embeddings") -> str:
+def sql_params_cte(table: str = "embeddings") -> str:
     """CTE computing the corpus-scaled bit count in the oracle's engine."""
     return (
         f"params AS (SELECT GREATEST({MIN_LSH_BITS}, LEAST({MAX_LSH_BITS}, "
@@ -94,7 +94,7 @@ def _sql_params_cte(table: str = "embeddings") -> str:
     )
 
 
-def _sql_bucket_terms(alias: str = "e") -> str:
+def sql_bucket_terms(alias: str = "e") -> str:
     """SQL twin of :func:`sign_bucket_col` with B dynamic: every term up to
     MAX_LSH_BITS exists, gated on ``i <= p.nbits``."""
     return " + ".join(
@@ -229,10 +229,10 @@ def similarity_threshold_pairs(spark, t):
 @query(
     "similarity_sign_lsh_buckets",
     oracle=f"""
-        WITH {_sql_params_cte()},
+        WITH {sql_params_cte()},
         b AS (
             SELECT e.vec_id, e.label,
-                   CAST({_sql_bucket_terms()} AS BIGINT) AS bucket
+                   CAST({sql_bucket_terms()} AS BIGINT) AS bucket
             FROM embeddings e, params p
         )
         SELECT bucket, COUNT(*) AS n_vectors, COUNT(DISTINCT label) AS n_labels
@@ -263,10 +263,10 @@ def similarity_sign_lsh_buckets(spark, t):
 @query(
     "similarity_bucketed_ann",
     oracle=f"""
-        WITH {_sql_params_cte()},
+        WITH {sql_params_cte()},
         b AS (
             SELECT e.vec_id, e.embedding,
-                   CAST({_sql_bucket_terms()} AS BIGINT) AS bucket
+                   CAST({sql_bucket_terms()} AS BIGINT) AS bucket
             FROM embeddings e, params p
         ),
         probes AS (

@@ -22,6 +22,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.numerics import sql_stable_sum, stable_sum
+from ..sources.catalog import input_digest, input_signature, signature_digest
+from ..sources.warehouse import (
+    cached_layout,
+    prepare_table_location,
+    session_token,
+    warehouse_dir,
+    warehouse_scratch_dir,
+    warehouse_scratch_root,
+)
 from . import events as ev_ops
 from ..streaming import rollup as ru
 from ..streaming import windows as sw
@@ -180,8 +189,6 @@ def streaming_daily_rollup(spark, sf_dir):
     lives under the warehouse scratch root (executor-shared filesystem,
     exit-cleaned), never a driver-local temp dir."""
     import os
-
-    from .scale import warehouse_scratch_dir
 
     path = os.path.join(warehouse_scratch_dir(spark, "rollup"), "daily")
     ru.maintain_daily_rollup(
@@ -361,7 +368,6 @@ def streaming_cdc_upsert(spark, sf_dir):
     import os
 
     from ..sources.catalog import read_parquet, register_views
-    from .scale import _cached_layout, _corpus_digest, warehouse_scratch_dir, warehouse_scratch_root
 
     register_views(spark, sf_dir)
     raw = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
@@ -371,9 +377,9 @@ def streaming_cdc_upsert(spark, sf_dir):
     # same leftover-dirs class the warehouse exit cleanup fixed). The
     # cache root lives under the warehouse (executor-shared filesystem,
     # exit-cleaned per process), not /tmp — r09 verdict item 2.
-    stage = _cached_layout(
+    stage = cached_layout(
         warehouse_scratch_root(spark, "stgcdc"),
-        _corpus_digest(raw),
+        input_digest(raw),
         "events_32part",
         lambda p: raw.repartition(32).write.mode("overwrite").parquet(p),
     )
@@ -526,8 +532,6 @@ def create_profile_state(
     writing batch's ``src_batch`` stamp (the exactly-once replay guard —
     see :func:`merge_profile_state`); the create itself is a
     whole-table overwrite, idempotent under replay by construction."""
-    from .scale import prepare_table_location
-
     prepare_table_location(ss, table, "cdcsb_")
     (
         batch_latest.withColumn(
@@ -624,10 +628,8 @@ def _snapshot_root(ss, table: str) -> str:
     hygiene apply unchanged), containing ``side0/``, ``side1/`` and the
     ``CURRENT`` pointer file."""
     import os
-    from urllib.parse import urlparse
 
-    warehouse = urlparse(ss.conf.get("spark.sql.warehouse.dir")).path
-    return os.path.join(warehouse, table.lower())
+    return os.path.join(warehouse_dir(ss), table.lower())
 
 
 def snapshot_current(ss, table: str):
@@ -711,8 +713,6 @@ def create_versioned_profile_state(ss, table: str, batch_latest, batch_id=0):
     replay: the side dir is cleared and rewritten, the flip re-points."""
     import os
     import shutil
-
-    from .scale import prepare_table_location
 
     prepare_table_location(ss, table, "cdcsb_")
     root = _snapshot_root(ss, table)
@@ -813,8 +813,6 @@ def cdc_upsert_pruned_drain(
     a canonical corpus dir)."""
     import os
 
-    from .scale import warehouse_scratch_dir
-
     if schema is not None:
         ev = sw.events_stream_from_stage(
             spark, stage, schema, max_files_per_trigger=files_per_trigger
@@ -895,20 +893,13 @@ def profile_stream_from_df(spark, events_df) -> DataFrame:
     import os
     import uuid
 
-    from .scale import (
-        _cached_layout,
-        _corpus_digest,
-        _session_token,
-        warehouse_scratch_dir,
-        warehouse_scratch_root,
-    )
-
     def write(p):
         events_df.repartition(32).write.mode("overwrite").parquet(p)
 
-    if events_df.inputFiles():
-        digest = _corpus_digest(events_df)
-        stage = _cached_layout(
+    signature = input_signature(events_df)
+    if signature:
+        digest = signature_digest(signature)
+        stage = cached_layout(
             warehouse_scratch_root(spark, "stgnlp"),
             digest,
             "events_32part",
@@ -918,7 +909,7 @@ def profile_stream_from_df(spark, events_df) -> DataFrame:
         digest = uuid.uuid4().hex[:16]
         stage = os.path.join(warehouse_scratch_dir(spark, "stgnlp"), "events_32part")
         write(stage)
-    table = f"cdcsb_nl{digest}_{_session_token()}"
+    table = f"cdcsb_nl{digest}_{session_token()}"
     schema = spark.read.parquet(stage).schema
     return cdc_upsert_pruned_drain(
         spark, None, stage, table, files_per_trigger=8, schema=schema
@@ -991,22 +982,17 @@ def streaming_cdc_upsert_bucketed(spark, sf_dir):
     import os
 
     from ..sources.catalog import read_parquet, register_views
-    from .scale import (
-        _cached_layout,
-        _corpus_digest,
-        _session_token,
-        warehouse_scratch_root,
-    )
 
     register_views(spark, sf_dir)
     raw = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
-    stage = _cached_layout(
+    digest = input_digest(raw)
+    stage = cached_layout(
         warehouse_scratch_root(spark, "stgcdc"),
-        _corpus_digest(raw),
+        digest,
         "events_32part",
         lambda p: raw.repartition(32).write.mode("overwrite").parquet(p),
     )
-    table = f"cdcsb_{_corpus_digest(raw)}_{_session_token()}"
+    table = f"cdcsb_{digest}_{session_token()}"
     # 32 staged files at 16 per trigger = a 2-micro-batch replay with each
     # batch's delta scan+agg 16-way parallel (the r10 profile found a
     # 1-file batch serializes the whole delta aggregation on one scan
@@ -1035,8 +1021,7 @@ def dedup_stream_drain(
     the accumulated verified pairs."""
     import os
 
-    from .dedup import MINHASH_VERIFY_THRESHOLD, _band_buckets, minhash_signatures
-    from .scale import warehouse_scratch_dir
+    from .dedup import MINHASH_VERIFY_THRESHOLD, band_buckets, minhash_signatures
 
     docs = (
         spark.readStream.schema(schema)
@@ -1078,7 +1063,7 @@ def dedup_stream_drain(
         sig = minhash_signatures(batch_df, with_sets=True).localCheckpoint(
             eager=False
         )
-        buckets = _band_buckets(sig)
+        buckets = band_buckets(sig)
         hs = sig.select("doc_id", "sz", "hset")
         new_b = buckets.select(
             F.col("doc_id").alias("new_id"),
@@ -1188,8 +1173,8 @@ def _register_streaming_dedup() -> None:
     the dependency one-way at import time)."""
     from .dedup import (
         MINHASH_VERIFY_THRESHOLD,
-        _PAIR_CTES,
-        _band_buckets,
+        PAIR_CTES,
+        band_buckets,
         minhash_signatures,
     )
 
@@ -1199,7 +1184,7 @@ def _register_streaming_dedup() -> None:
         # identical to dedup_minhash_lsh's oracle, because any batching of
         # the feed must produce exactly the full pair set (see docstring).
         oracle=f"""
-            WITH {_PAIR_CTES}
+            WITH {PAIR_CTES}
             SELECT a_id, b_id, jaccard FROM jpairs
             WHERE jaccard >= {MINHASH_VERIFY_THRESHOLD}
         """,
@@ -1215,7 +1200,7 @@ def _register_streaming_dedup() -> None:
         (batch count is a replay parameter — see the call below) and
         each batch (a) band-hashes ONLY its own documents with the exact
         kernel the batch entries use (minhash_signatures /
-        _band_buckets — shared code, so stream and batch can never
+        band_buckets — shared code, so stream and batch can never
         diverge on shingle or banding semantics), (b) probes the
         ACCUMULATED base band-bucket state for cross-batch candidates
         plus a batch-internal self-join for co-arriving pairs, (c)
@@ -1249,13 +1234,12 @@ def _register_streaming_dedup() -> None:
         import os
 
         from ..sources.catalog import read_parquet, register_views
-        from .scale import _cached_layout, _corpus_digest, warehouse_scratch_root
 
         register_views(spark, sf_dir)
         raw = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
-        stage = _cached_layout(
+        stage = cached_layout(
             warehouse_scratch_root(spark, "stgdds"),
-            _corpus_digest(raw),
+            input_digest(raw),
             "documents_32part",
             lambda p: raw.repartition(32).write.mode("overwrite").parquet(p),
         )

@@ -25,6 +25,7 @@ from ..functions.text import (
     token_count,
     words_col,
 )
+from ..plans.costing import fits_broadcast
 from .registry import query
 
 
@@ -697,15 +698,13 @@ def text_tfidf_top_terms(spark, t):
     n_docs = t["documents"].agg(F.count("*").alias("n_docs"))
     from pyspark.sql import Window
 
-    from .relational import _fits_broadcast
-
     # Cost-chosen df join (r08 A/B, sf10 same-session min-of-3:
     # broadcast-vocab 3.26 s vs shuffled 3.69 s): the vocabulary relation
     # grows sublinearly with the corpus, so it usually fits the broadcast
     # budget and the tf side then never re-shuffles on the term key; a
     # vocabulary past the threshold (100 TB web corpora reach 10^8+
     # terms) falls back to the term-key shuffle join.
-    if _fits_broadcast(spark, df_rel):
+    if fits_broadcast(spark, df_rel):
         df_rel = F.broadcast(df_rel)
     scored = (
         tf.join(df_rel, "w")
@@ -779,8 +778,6 @@ def text_unigram_surprisal(spark, t):
     per-doc rollup re-aggregates tf-grain rows; no text bodies move
     after the explode. Per-term products stay in int64 range to ~1e13
     corpus tokens x 1e3-token docs (1e16 < 2^63)."""
-    from .relational import _fits_broadcast
-
     inst = (
         t["documents"]
         .select("doc_id", F.explode(words_col()).alias("w"))
@@ -794,7 +791,7 @@ def text_unigram_surprisal(spark, t):
     # close enough to that line that exact-by-construction is the only
     # defensible form (DuckDB's // is integer division already).
     units = F.expr("total DIV c")
-    if _fits_broadcast(spark, freq):
+    if fits_broadcast(spark, freq):
         freq = F.broadcast(freq)
     return (
         tf.join(freq, "w")
@@ -869,8 +866,6 @@ def text_bigram_surprisal(spark, t):
     corpora — so the fallback is the expected 100 TB path). Documents
     with fewer than two non-empty tokens have no transitions and are
     absent from the output on both engines."""
-    from .relational import _fits_broadcast
-
     pairs = F.expr(
         "transform(sequence(1, size(ws) - 1),"
         " i -> struct(element_at(ws, i) AS w1, element_at(ws, i + 1) AS w2))"
@@ -889,9 +884,9 @@ def text_bigram_surprisal(spark, t):
     cnt = tf.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
     pre = cnt.groupBy("w1").agg(F.sum("c12").alias("c1"))
     units = F.expr("c1 DIV c12")
-    if _fits_broadcast(spark, cnt):
+    if fits_broadcast(spark, cnt):
         cnt = F.broadcast(cnt)
-    if _fits_broadcast(spark, pre):
+    if fits_broadcast(spark, pre):
         pre = F.broadcast(pre)
     return (
         tf.join(cnt, ["w1", "w2"])

@@ -23,8 +23,16 @@ from ..functions.numerics import (
     stable_avg,
     stable_sum,
 )
+from ..plans.costing import (
+    BCAST_BUILD_ROW_CAP,
+    PROBE_SLACK,
+    broadcast_threshold,
+    counted_probe,
+    fits_broadcast_counted,
+    parse_byte_conf,
+    plan_size_estimate,
+)
 from .registry import query
-from .relational import _fits_broadcast_counted
 
 
 @query(
@@ -98,7 +106,7 @@ def tpch_q3(spark, t):
     (o_orderkey, o_orderdate) slice is small long before lineitem enters:
 
     - **Broadcast form** (while the qualifying-orders slice fits the
-      broadcast threshold — checked via :func:`_fits_broadcast_counted`,
+      broadcast threshold — checked via :func:`fits_broadcast_counted`,
       which falls back to one cheap COUNT because the static estimator
       cannot see through the date filter): broadcast the BUILDING custkeys
       into orders (left-semi), broadcast that slice into the filtered
@@ -132,7 +140,7 @@ def tpch_q3(spark, t):
         o.o_custkey == F.col("c_custkey"),
         "left_semi",
     ).select("o_orderkey", "o_orderdate")
-    if _fits_broadcast_counted(spark, qual):
+    if fits_broadcast_counted(spark, qual):
         return (
             l.join(F.broadcast(qual), l.l_orderkey == qual.o_orderkey)
             .groupBy("o_orderkey", "o_orderdate")
@@ -227,7 +235,7 @@ def tpch_q5(spark, t):
         c.c_nationkey == F.col("n_nationkey"),
         "left_semi",
     ).select("c_custkey", "c_nationkey")
-    if _fits_broadcast_counted(spark, c_slice):
+    if fits_broadcast_counted(spark, c_slice):
         oc = o_win.join(
             F.broadcast(c_slice), o_win.o_custkey == c_slice.c_custkey
         ).select("o_orderkey", "c_nationkey")
@@ -307,7 +315,7 @@ def tpch_q5(spark, t):
 
 
 #: Ceiling on Q5's mid-band supplier-first broadcast of the qualifying
-#: orders slice. This deliberately exceeds _BCAST_BUILD_ROW_CAP: here the
+#: orders slice. This deliberately exceeds BCAST_BUILD_ROW_CAP: here the
 #: multi-M-row single-threaded build buys out the FACT-GRAIN EXCHANGE of
 #: the shuffle form (33M pre-aggregated rows at sf30), a far bigger
 #: prize than the dim exchange the general cap was calibrated against
@@ -331,17 +339,9 @@ def _q5_suppfirst_row_cap(spark) -> int:
     """Effective mid-band row cap (ADVICE r13): derived from the driver
     heap so a small-driver deployment never trades the safe shuffle path
     for a driver-OOM broadcast."""
-    mem = _parse_jvm_mem(spark.conf.get("spark.driver.memory", "1g"))
+    # Spark reads a bare spark.driver.memory as MiB.
+    mem = parse_byte_conf(spark.conf.get("spark.driver.memory", "1g"), 1 << 20)
     return min(_Q5_SUPPFIRST_ROW_CAP, mem // _Q5_SUPPFIRST_BYTES_PER_ROW)
-
-
-def _parse_jvm_mem(s: str) -> int:
-    """JVM memory string ('8g', '512m', '1024k', plain bytes) -> bytes."""
-    s = s.strip().lower()
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if s and s[-1] in mult:
-        return int(float(s[:-1]) * mult[s[-1]])
-    return int(s)
 
 
 def _q5_orders_slice_probe(
@@ -352,20 +352,18 @@ def _q5_orders_slice_probe(
     cost the mid-band supplier-first form off the same counted probe
     (None = the probe was never paid: the estimate was conclusive).
 
-    `_fits_broadcast_counted` cannot be used directly on ``oc``: Spark's
+    `fits_broadcast_counted` cannot be used directly on ``oc``: Spark's
     simple estimator sizes an inner JOIN as the product of its children
     (measured 3.0e14 'bytes' for a 14 MB slice at sf10), which always
     lands beyond the probe band. The slack guard here therefore reads the
     ORDERS window estimate (scan size propagated through the filter — the
     honest pre-join upper bound) widened by the 1/|regions| customer cut,
     and the borderline decade is settled by counting the actual slice,
-    exactly like `_fits_broadcast_counted`'s probe. At bench scale the
+    exactly like `fits_broadcast_counted`'s probe. At bench scale the
     date-window estimate sits inside the band and the count decides; at
     100 TB the orders estimate alone is terabytes, so the scalable
     shuffle form is taken without paying any probe."""
-    from .relational import _PROBE_SLACK, _broadcast_threshold, plan_size_estimate
-
-    thr = _broadcast_threshold(spark)
+    thr = broadcast_threshold(spark)
     if thr <= 0:
         return False, None
     est = plan_size_estimate(o_win)
@@ -375,23 +373,21 @@ def _q5_orders_slice_probe(
     # The probe band is widened past the tight gate's by the suppfirst
     # cap's row budget (16 B/row, two long columns) so the mid-band
     # decision is also count-settled rather than estimate-guessed. The
-    # row-budget term carries NO _PROBE_SLACK (ADVICE r13): the 16 B/row
+    # row-budget term carries NO PROBE_SLACK (ADVICE r13): the 16 B/row
     # budget already understates the ~19 B/row footer rate, so the term
     # has built-in slack — with the x8 factor the band reached ~7.7 GB
     # of o_win estimate and the counted probe (a real orders x customer
     # count job) ran for slices that could never pass the cap, pure
     # overhead before falling to the shuffle branch.
     band_cap = max(
-        _PROBE_SLACK * n_regions * thr,
+        PROBE_SLACK * n_regions * thr,
         n_regions * suppfirst_cap * 16,
     )
     if est > band_cap:
         return False, None
-    from .relational import _BCAST_BUILD_ROW_CAP, _counted_probe
-
     oc_plan = oc._jdf.queryExecution().optimizedPlan()
-    n = _counted_probe(oc, oc_plan, est)
-    return n <= _BCAST_BUILD_ROW_CAP and n * 16 <= thr, n
+    n = counted_probe(oc, oc_plan, est)
+    return n <= BCAST_BUILD_ROW_CAP and n * 16 <= thr, n
 
 
 @query(

@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.numerics import sql_stable_sum, stable_sum
+from ..plans.costing import fits_broadcast_counted
 from .registry import query
-from .relational import _fits_broadcast_counted
 
 
 def _year(col):
@@ -55,7 +55,7 @@ def tpch_q4(spark, t):
     lower bound), which prunes most of the lineitem scan.
 
     - **Broadcast form** (while the six-month orders window fits the
-      broadcast threshold; :func:`_fits_broadcast_counted` settles the
+      broadcast threshold; :func:`fits_broadcast_counted` settles the
       borderline with one COUNT because the static estimator ignores the
       date filter): broadcast (o_orderkey, o_orderdate, o_orderpriority)
       into the pruned lineitem scan with the non-equi lag predicate in the
@@ -85,7 +85,7 @@ def tpch_q4(spark, t):
         F.col("l_shipdate") > F.lit("1997-04-01 00:00:00").cast("timestamp_ntz")
     )
     op = o.select("o_orderkey", "o_orderdate", "o_orderpriority")
-    if _fits_broadcast_counted(spark, op):
+    if fits_broadcast_counted(spark, op):
         # Survivor collapse via countDistinct, not the r07 two-phase
         # (o_orderkey, prio) rollup: identical rows, statistical tie at
         # sf10 (1.46 vs 1.44 s), and 29% faster at sf30 (4.52 vs 6.38 s
@@ -205,7 +205,7 @@ def tpch_q8(spark, t):
     (PROMO partkeys, (suppkey, nationkey), nation roles). Cost-chosen fact
     side: the qualifying orders slice — two-year window semi-joined to
     AMERICA customers — is ~1/15 of orders, so while it passes
-    :func:`_fits_broadcast_counted` it broadcasts into the PROMO lineitem
+    :func:`fits_broadcast_counted` it broadcasts into the PROMO lineitem
     slice and the whole query runs broadcast-only with the 2-row aggregate
     as its single exchange (measured 2.25 s -> 1.40 s at sf10); past the
     threshold the orderkey/custkey shuffle joins take over (the 100 TB
@@ -254,7 +254,7 @@ def tpch_q8(spark, t):
     qual = o.join(
         F.broadcast(c_am), o.o_custkey == F.col("c_custkey"), "left_semi"
     ).select("o_orderkey", "o_orderdate")
-    if _fits_broadcast_counted(spark, qual):
+    if fits_broadcast_counted(spark, qual):
         # Explicit rollup to (o_year, supp_nation) grain BEFORE the share
         # aggregate (r13 refresh of tools/q8_ab.py at sf30: 4.54 vs the
         # r08 form's 5.49 s, identical rows; at sf10 the two were within
@@ -629,7 +629,7 @@ def tpch_q22(spark, t):
     urgent orders because this corpus gives every customer at least one
     order). Scalar average broadcasts as a 1-row frame; NOT EXISTS is a
     left-anti join on the filtered orders key set — broadcast while the
-    urgent custkey column passes :func:`_fits_broadcast_counted` (the anti
+    urgent custkey column passes :func:`fits_broadcast_counted` (the anti
     build side tolerates duplicate keys, so no pre-distinct shuffle),
     shuffled past it. Round 5: the gate gained a build-ROW cap because
     this query exposed byte-fitness as insufficient — at sf10 the 3 M
@@ -648,7 +648,7 @@ def tpch_q22(spark, t):
         )
     )
     okeys = o.select("o_custkey")
-    if _fits_broadcast_counted(spark, okeys):
+    if fits_broadcast_counted(spark, okeys):
         okeys = F.broadcast(okeys)
     else:
         # Pin the gate's decision: without the hint AQE sees the <64 MB

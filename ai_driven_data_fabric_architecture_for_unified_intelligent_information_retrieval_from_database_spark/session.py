@@ -59,14 +59,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def pin_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-built session.
-
-    The correctness driver constructs its own SparkSession and hands it to
-    ``queries()`` callables; these confs are the subset we rely on that can
-    be set post-construction.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark

@@ -22,9 +22,10 @@ predicate pushdown and column pruning; nothing here materializes data.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,6 +122,36 @@ def file_signature(path: str) -> tuple[tuple[str, int, int], ...] | None:
             return None
         out.append((f, *st))
     return tuple(sorted(out))
+
+
+def _input_record(uri: str) -> tuple[str, tuple[int, int] | None]:
+    parsed = urlparse(uri)
+    if parsed.scheme == "file":
+        path = unquote(parsed.path)
+        return path, file_stat(path)
+    return uri, None if parsed.scheme else file_stat(uri)
+
+
+def input_signature(*dfs: DataFrame) -> tuple[tuple[str, tuple[int, int] | None], ...]:
+    """Sorted ``(file, (size, mtime_ns))`` of every file the DataFrames
+    read (``inputFiles()``): the freshness key of a cached answer, layout,
+    probe count or footer verdict built from them. A ``file:`` URI is
+    percent-decoded once; a plain path is stat'ed as given (so a file
+    named ``a#b`` still stats); a non-local URI keeps stat ``None``, so
+    only its name counts."""
+    records = dict(_input_record(uri) for df in dfs for uri in df.inputFiles())
+    return tuple(sorted(records.items()))
+
+
+def signature_digest(signature) -> str:
+    """Short md5 of an :func:`input_signature`: a freshness key that fits
+    in a table or directory name."""
+    return hashlib.md5(repr(signature).encode()).hexdigest()[:16]
+
+
+def input_digest(*dfs: DataFrame) -> str:
+    """:func:`signature_digest` of the DataFrames' input files."""
+    return signature_digest(input_signature(*dfs))
 
 
 def _inference_confs(spark: SparkSession) -> tuple[str | None, ...]:

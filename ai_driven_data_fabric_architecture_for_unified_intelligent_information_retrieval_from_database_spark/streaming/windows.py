@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import read_parquet, register_views
+from ..sources.warehouse import warehouse_scratch_dir
 
 
 def events_stream(
@@ -40,8 +41,6 @@ def events_stream(
     executor-shared filesystem), never driver-local /tmp — r09 verdict
     item 2: executors must be able to open the staged paths.
     """
-    from ..operators.scale import warehouse_scratch_dir
-
     register_views(spark, sf_dir)  # pins session confs (UTC, nanosAsLong)
     src = os.path.join(sf_dir, "events.parquet")
     raw_schema = read_parquet(spark, src).schema

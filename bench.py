@@ -456,7 +456,7 @@ def timed_pass(cell: str, build, spark, sf_dir: str) -> tuple[float, float]:
 def main() -> None:
     # Startup hygiene: clear a SIGKILLed predecessor's token-suffixed
     # warehouse dirs (the atexit cleanup never ran for it).
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
         prune_stale_warehouse,
     )
 

@@ -16,7 +16,7 @@ def spark():
     from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark import (
         get_spark,
     )
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
         prune_stale_warehouse,
     )
 

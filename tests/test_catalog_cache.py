@@ -105,3 +105,26 @@ def test_file_signature(tmp_path):
     assert catalog.file_signature("hdfs://namenode/t.parquet") is None
     assert catalog.file_signature("s3a://bucket/t.parquet") is None
     assert catalog.file_signature(str(tmp_path / "missing")) is None
+
+
+def test_input_signature_decodes_uris_once(tmp_path):
+    """``file:`` URIs are percent-decoded exactly once, a plain path is
+    stat'ed as given (``#`` is no fragment there), and a non-local URI
+    keeps its name with no stat."""
+    files = {name: tmp_path / name for name in ("a#b", "with space", "pct%41")}
+    for i, path in enumerate(files.values()):
+        path.write_bytes(b"x" * (i + 1))
+
+    class Frame:
+        def inputFiles(self):
+            return [
+                str(files["a#b"]),
+                files["with space"].as_uri(),
+                files["pct%41"].as_uri(),
+                "hdfs://namenode/t.parquet",
+            ]
+
+    sig = dict(catalog.input_signature(Frame()))
+    for path in files.values():
+        assert sig.pop(str(path)) == catalog.file_stat(str(path)) is not None
+    assert sig == {"hdfs://namenode/t.parquet": None}

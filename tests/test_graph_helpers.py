@@ -83,11 +83,11 @@ def test_counted_probe_memoizes(spark, monkeypatch):
     """The borderline COUNT probe must run once per (plan, estimate) —
     bench passes reconstruct the same slice and should hit the cache
     even though expression IDs differ between constructions."""
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators import (
-        relational,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans import (
+        costing,
     )
 
-    relational._PROBE_COUNT_CACHE.clear()
+    costing._PROBE_COUNT_CACHE.clear()
     calls = {"n": 0}
     orig_count = type(spark.range(1)).count
 
@@ -102,7 +102,7 @@ def test_counted_probe_memoizes(spark, monkeypatch):
         ).where(F.col("o_totalprice") > 1000)
         plan = df._jdf.queryExecution().optimizedPlan()
         est = int(str(plan.stats().sizeInBytes()))
-        n = relational._counted_probe(df, plan, est)
+        n = costing.counted_probe(df, plan, est)
     assert calls["n"] == 1, "probe re-counted a cached plan"
     assert n == orig_count(
         spark.read.parquet("/root/testdata/sf0.001/orders.parquet").where(
@@ -116,13 +116,13 @@ def test_counted_probe_cache_is_bounded(spark, monkeypatch):
     which then counts again."""
     import os
 
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators import (
-        relational,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans import (
+        costing,
     )
     from conftest import SF_SMOKE
 
-    relational._PROBE_COUNT_CACHE.clear()
-    monkeypatch.setattr(relational._PROBE_COUNT_CACHE, "max_entries", 2)
+    costing._PROBE_COUNT_CACHE.clear()
+    monkeypatch.setattr(costing._PROBE_COUNT_CACHE, "max_entries", 2)
     calls = {"n": 0}
     orig_count = type(spark.range(1)).count
 
@@ -136,15 +136,48 @@ def test_counted_probe_cache_is_bounded(spark, monkeypatch):
     def probe(floor):
         df = orders.where(F.col("o_totalprice") > floor)
         plan = df._jdf.queryExecution().optimizedPlan()
-        return relational._counted_probe(df, plan, int(str(plan.stats().sizeInBytes())))
+        return costing.counted_probe(df, plan, int(str(plan.stats().sizeInBytes())))
 
     first = probe(1000)
     probe(2000)
     probe(3000)
-    assert calls["n"] == 3 and len(relational._PROBE_COUNT_CACHE) == 2
+    assert calls["n"] == 3 and len(costing._PROBE_COUNT_CACHE) == 2
     assert probe(1000) == first
     assert calls["n"] == 4, "an evicted slice must be counted again"
-    relational._PROBE_COUNT_CACHE.clear()
+    costing._PROBE_COUNT_CACHE.clear()
+
+
+def test_packable_cache_is_bounded(spark, tmp_path, monkeypatch):
+    """Past its cap the key-pack verdict memo evicts the least recently
+    used corpus, whose footers are then read again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators import (
+        graph,
+    )
+
+    graph._PACKABLE_CACHE.clear()
+    monkeypatch.setattr(graph._PACKABLE_CACHE, "max_entries", 2)
+    calls = {"n": 0}
+    orig_file = pq.ParquetFile
+
+    def counting(*args, **kwargs):
+        calls["n"] += 1
+        return orig_file(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    corpora = {}
+    for i in range(3):
+        path = str(tmp_path / f"lineitem{i}.parquet")
+        pq.write_table(pa.table({"l_orderkey": [i], "l_partkey": [i]}), path)
+        corpora[i] = spark.read.parquet(path)
+
+    assert all(_partkey_packable(corpora[i]) for i in range(3))
+    assert calls["n"] == 3 and len(graph._PACKABLE_CACHE) == 2
+    assert _partkey_packable(corpora[0]) is True
+    assert calls["n"] == 4, "an evicted corpus must be probed again"
+    graph._PACKABLE_CACHE.clear()
 
 
 def test_copurchase_pair_counts_matches_plain_rollup(spark):

@@ -390,19 +390,19 @@ def test_parse_byte_conf_handles_spark_size_forms(spark):
     """ADVICE r03: the threshold conf may render as '10485760b' or be set
     as '50MB'; int() alone silently fell back to a hardcoded 10MB and the
     cost-based plan choice ignored the session's real threshold."""
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.relational import (
-        _fits_broadcast,
-        _parse_byte_conf,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans.costing import (
+        fits_broadcast,
+        parse_byte_conf,
     )
 
-    assert _parse_byte_conf("10485760") == 10 * 1024 * 1024
-    assert _parse_byte_conf("10485760b") == 10 * 1024 * 1024
-    assert _parse_byte_conf("50MB") == 50 * 1024 * 1024
-    assert _parse_byte_conf("1g") == 1 << 30
-    assert _parse_byte_conf("2k") == 2048
-    assert _parse_byte_conf("-1") == -1
+    assert parse_byte_conf("10485760") == 10 * 1024 * 1024
+    assert parse_byte_conf("10485760b") == 10 * 1024 * 1024
+    assert parse_byte_conf("50MB") == 50 * 1024 * 1024
+    assert parse_byte_conf("1g") == 1 << 30
+    assert parse_byte_conf("2k") == 2048
+    assert parse_byte_conf("-1") == -1
     with pytest.raises(ValueError):
-        _parse_byte_conf("lots")
+        parse_byte_conf("lots")
     # A human-readable session threshold must now actually steer the
     # broadcast decision rather than silently falling back.
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -412,11 +412,31 @@ def test_parse_byte_conf_handles_spark_size_forms(spark):
     ).register_views(spark, SF_ORACLE)
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "512MB")
-        assert _fits_broadcast(spark, t["orders"])
+        assert fits_broadcast(spark, t["orders"])
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
-        assert not _fits_broadcast(spark, t["orders"])
+        assert not fits_broadcast(spark, t["orders"])
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_q5_suppfirst_cap_reads_bare_driver_memory_as_mib():
+    """Spark reads a bare ``spark.driver.memory`` as MiB, so "4096" is the
+    same heap as "4g" and must give the same q5 mid-band row cap."""
+    from types import SimpleNamespace
+
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.tpch import (
+        _q5_suppfirst_row_cap,
+    )
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans.costing import (
+        parse_byte_conf,
+    )
+
+    def cap(mem):
+        conf = SimpleNamespace(get=lambda key, default=None: mem)
+        return _q5_suppfirst_row_cap(SimpleNamespace(conf=conf))
+
+    assert parse_byte_conf("4096", 1 << 20) == parse_byte_conf("4g") == 4 << 30
+    assert cap("4096") == cap("4g") == cap("4096m") > 1_000_000
 
 
 def test_fits_broadcast_counted_probes_the_borderline(spark):
@@ -424,8 +444,8 @@ def test_fits_broadcast_counted_probes_the_borderline(spark):
     band one COUNT decides from rows x defaultSize; beyond the band the
     fallback is taken without probing; a disabled threshold is never
     broadcastable."""
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.relational import (
-        _fits_broadcast_counted,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans.costing import (
+        fits_broadcast_counted,
     )
 
     t = __import__(
@@ -438,19 +458,19 @@ def test_fits_broadcast_counted_probes_the_borderline(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(est + 1))
-        assert _fits_broadcast_counted(spark, df)  # static fit, no probe
+        assert fits_broadcast_counted(spark, df)  # static fit, no probe
         # borderline (thr = est-1 puts the estimate just past the static
         # check but inside the 8x band): the COUNT probe must decide, and
         # its decision is rows x 8 bytes against the threshold.
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(est - 1))
-        assert _fits_broadcast_counted(spark, df) == (rows * 8 <= est - 1)
+        assert fits_broadcast_counted(spark, df) == (rows * 8 <= est - 1)
         # far past the band: no probe, straight to the fallback plan
         spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", str(max(est // 16, 1))
         )
-        assert not _fits_broadcast_counted(spark, df)
+        assert not fits_broadcast_counted(spark, df)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert not _fits_broadcast_counted(spark, df)
+        assert not fits_broadcast_counted(spark, df)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -556,21 +576,21 @@ def test_broadcast_gate_row_cap(spark):
     1.6x slower broadcast than shuffled). A 2M-row single-long relation
     fits every byte threshold here but must be rejected on rows; a small
     relation passes."""
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.relational import (
-        _BCAST_BUILD_ROW_CAP,
-        _fits_broadcast_counted,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans.costing import (
+        BCAST_BUILD_ROW_CAP,
+        fits_broadcast_counted,
     )
 
-    big = spark.range(_BCAST_BUILD_ROW_CAP + 500_000)  # 16 MB of longs
+    big = spark.range(BCAST_BUILD_ROW_CAP + 500_000)  # 16 MB of longs
     small = spark.range(1_000)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for thr in ("10485760", str(64 * 1024 * 1024)):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
         try:
-            assert not _fits_broadcast_counted(spark, big), (
+            assert not fits_broadcast_counted(spark, big), (
                 f"2M-row build approved at thr={thr}"
             )
-            assert _fits_broadcast_counted(spark, small)
+            assert fits_broadcast_counted(spark, small)
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -590,8 +610,8 @@ def test_streaming_cdc_bucketed_batch_plan_no_snapshot_exchange_and_pruned_io(sp
 
     from pyspark.sql import functions as F
 
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
-        _session_token,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
+        session_token,
     )
     from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.streaming_entries import (
         N_STATE_BUCKETS,
@@ -609,7 +629,7 @@ def test_streaming_cdc_bucketed_batch_plan_no_snapshot_exchange_and_pruned_io(sp
     ).select(
         "user_id", F.col("ts_s").cast("timestamp").alias("ts"), "event_id", "event_type"
     )
-    tbl = f"cdcsb_plangate_{_session_token()}"
+    tbl = f"cdcsb_plangate_{session_token()}"
     create_profile_state(spark, tbl, _batch_latest(ev))
     try:
         # A delta localized to one partition: keys whose pb == target.
@@ -766,8 +786,8 @@ def test_versioned_side_table_merge_keeps_zero_exchange_and_link_io(spark):
 
     from pyspark.sql import functions as F
 
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
-        _session_token,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
+        session_token,
     )
     from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators import (
         streaming_entries as se,
@@ -780,7 +800,7 @@ def test_versioned_side_table_merge_keeps_zero_exchange_and_link_io(spark):
         "user_id", F.col("ts_s").cast("timestamp").alias("ts"),
         "event_id", "event_type",
     )
-    tbl = f"cdcsb_vplangate_{_session_token()}"
+    tbl = f"cdcsb_vplangate_{session_token()}"
     se.create_versioned_profile_state(spark, tbl, se._batch_latest(ev), 0)
     try:
         cur_name, cur_side, _ = se.snapshot_current(spark, tbl)

@@ -3,6 +3,8 @@ beyond the differential oracle suite."""
 
 from __future__ import annotations
 
+import pytest
+
 from conftest import SF_ORACLE
 
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.registry import (
@@ -48,24 +50,31 @@ def test_pii_scrub_redacts_injected_pii(spark):
     assert rows[doc_id].scrubbed_fp == hashlib.md5(expected.encode()).hexdigest()
 
 
-def test_corpus_digest_tracks_content_not_just_names(spark, tmp_path):
+@pytest.mark.parametrize(
+    "subdir", ["plain", "with space", "pct%41"], ids=["plain", "space", "percent"]
+)
+def test_corpus_digest_tracks_content_not_just_names(spark, tmp_path, subdir):
     """Regression for the round-4 review finding: rewriting a corpus in
     place under the same file names must change the layout-cache digest,
-    or cached partitioned/bucketed copies silently serve stale data."""
+    or cached partitioned/bucketed copies silently serve stale data.
+    Spark reports a file under a space or a ``%`` as a percent-escaped
+    URI; a digest that stats the escaped path finds no file and keys on
+    the names alone."""
     import shutil
     import time
 
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
-        _corpus_digest,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.catalog import (
+        input_digest,
     )
 
     src = "/root/testdata/sf0.001/region.parquet"
-    dst = str(tmp_path / "region.parquet")
+    (tmp_path / subdir).mkdir()
+    dst = str(tmp_path / subdir / "region.parquet")
     shutil.copy(src, dst)
-    d1 = _corpus_digest(spark.read.parquet(dst))
+    d1 = input_digest(spark.read.parquet(dst))
     time.sleep(0.01)
     shutil.copy(src, dst)  # same name, same bytes, new mtime
-    d2 = _corpus_digest(spark.read.parquet(dst))
+    d2 = input_digest(spark.read.parquet(dst))
     assert d1 != d2
 
 
@@ -199,13 +208,13 @@ spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.warehouse.dir", {str(wh)!r})
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
-    _session_token, ensure_bucketed_table,
+from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
+    session_token, ensure_bucketed_table,
 )
 df = spark.range(100).selectExpr("id AS key", "id * 2 AS v")
-ensure_bucketed_table(spark, f"bk_exittest_deadbeef_{{_session_token()}}", df, "key", "deadbeef")
+ensure_bucketed_table(spark, f"bk_exittest_deadbeef_{{session_token()}}", df, "key", "deadbeef")
 assert any(d.startswith("bk_exittest") for d in __import__("os").listdir({str(wh)!r}))
-print("TOKEN=" + _session_token())
+print("TOKEN=" + session_token())
 spark.stop()
 """
     out = subprocess.run(
@@ -228,7 +237,7 @@ def test_prune_stale_warehouse_on_start(tmp_path):
     import os
     import time
 
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
         prune_stale_warehouse,
     )
 

@@ -361,8 +361,8 @@ def test_cdc_upsert_bucketed_state_is_batch_boundary_invariant(
     import os
     import random
 
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
-        _session_token,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
+        session_token,
     )
     from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.streaming_entries import (
         cdc_upsert_pruned_drain,
@@ -378,7 +378,7 @@ def test_cdc_upsert_bucketed_state_is_batch_boundary_invariant(
     for i, p in enumerate(order):
         os.utime(os.path.join(stage, p), (base + i, base + i))
 
-    tbl = f"cdcsb_tshuf_{_session_token()}"
+    tbl = f"cdcsb_tshuf_{session_token()}"
     final = cdc_upsert_pruned_drain(spark, SF_SMOKE, stage, tbl, expect_batches=8)
     got = sorted(tuple(r) for r in final.collect())
     want = sorted(
@@ -440,8 +440,8 @@ def test_cdc_upsert_commit_crash_replay_is_exactly_once(spark):
     already-committed partition with value-identical rows."""
     from pyspark.sql import functions as F
 
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
-        _session_token,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
+        session_token,
     )
     from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.streaming_entries import (
         _batch_latest,
@@ -460,7 +460,7 @@ def test_cdc_upsert_commit_crash_replay_is_exactly_once(spark):
         "event_id",
         "event_type",
     )
-    tbl = f"cdcsb_crashgate_{_session_token()}"
+    tbl = f"cdcsb_crashgate_{session_token()}"
     create_profile_state(spark, tbl, _batch_latest(ev), batch_id=0)
     try:
         # Batch 1: a delta spanning MULTIPLE partitions (every third key,
@@ -540,8 +540,8 @@ def test_versioned_commit_reader_isolation_and_replay(spark):
     from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators import (
         streaming_entries as se,
     )
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.scale import (
-        _session_token,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.warehouse import (
+        session_token,
     )
 
     ev = spark.createDataFrame(
@@ -553,7 +553,7 @@ def test_versioned_commit_reader_isolation_and_replay(spark):
         "event_id",
         "event_type",
     )
-    tbl = f"cdcsb_isogate_{_session_token()}"
+    tbl = f"cdcsb_isogate_{session_token()}"
     se.create_versioned_profile_state(spark, tbl, se._batch_latest(ev), 0)
     try:
         cur0 = se.snapshot_current(spark, tbl)

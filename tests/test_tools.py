@@ -159,3 +159,29 @@ def test_fingerprint_sees_a_null_moving_between_columns(spark, ab):
     right = ab.fingerprint(spark.createDataFrame([(None, 7)], "a long, b long"))
     assert (left[0], left[2]) == (right[0], right[2])
     assert left != right
+
+
+def test_package_modules_import_no_private_names():
+    """Each shared decision has one home with public names: no package
+    module imports an underscore name from another package module. A
+    public name imported under an ``_alias`` is fine."""
+    package = os.path.basename(PACKAGE)
+    found = []
+    for d, _, names in os.walk(PACKAGE):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(d, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.ImportFrom):
+                    continue
+                if node.level == 0 and not (node.module or "").startswith(package):
+                    continue
+                found += [
+                    f"{os.path.relpath(path, PACKAGE)}:{node.lineno} {alias.name}"
+                    for alias in node.names
+                    if alias.name.startswith("_")
+                ]
+    assert not found, found
