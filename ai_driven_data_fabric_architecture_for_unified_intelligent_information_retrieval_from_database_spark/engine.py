@@ -43,8 +43,7 @@ from pyspark.sql import SparkSession
 
 from .cache import CACHE_MAX_ENTRIES, CACHE_TTL_SECONDS, TTLCache  # noqa: F401
 from .functions.serialization import serialize_rows
-from .plans import star_planner
-from .plans.planner import Planner
+from .plans.planner import Plan, Planner
 from .plans.validator import validate_select
 from .sources.catalog import file_stat, input_signature, inspect_table
 from .sources.connectors import QueryLogBuffer
@@ -108,8 +107,7 @@ class DataFabricEngine:
         max_result_rows: int = MAX_RESULT_ROWS,
     ):
         self.spark = spark
-        self.tables = set(tables) if tables else {default_table}
-        self.default_table = default_table
+        self.tables = frozenset(tables or {default_table})
         if llm_provider is None:
             # Reference posture (core/ai_query_generator.py:128-131): the
             # LLM path turns on iff an API key is configured; otherwise the
@@ -122,10 +120,11 @@ class DataFabricEngine:
             # calls — distinct from None="from env", so offline/test runs
             # can't be flipped live by a leaked OPENROUTER_API_KEY.
             llm_provider = None
-        self.planner = Planner(table=default_table, llm_provider=llm_provider,
+        self.planner = Planner(tables=self.tables, table=default_table,
+                               llm_provider=llm_provider,
                                schema_text=self._schema_text(default_table))
         #: Result cache tiers: question text -> :class:`CacheEntry`, and
-        #: planned query (:func:`_query_key`) -> :class:`CacheEntry`.
+        #: planned query (:attr:`Plan.key`) -> :class:`CacheEntry`.
         self.cache = TTLCache()
         self.sql_cache = TTLCache()
         self._stats = dict.fromkeys(("question_hits", "sql_hits", "misses", "stale"), 0)
@@ -162,9 +161,9 @@ class DataFabricEngine:
         sql_query: str | None = None
         outcome = "misses"
         try:
-            planned = self._plan(user_query)
+            planned = self.planner.plan(user_query)
             sql_query = planned.sql
-            query_key = _query_key(planned)
+            query_key = planned.key
             hit = self._fresh(self.sql_cache, query_key)
             if hit is not None:
                 outcome = "sql_hits"
@@ -234,30 +233,16 @@ class DataFabricEngine:
         with self._stats_lock:
             return dict(self._stats)
 
-    def _plan(self, user_query: str):
-        """Precedence mirrors the reference lifecycle (:379-393): the
-        configured LLM path first, then deterministic rules — star rules
-        (multi-table, inert unless all their tables are allowlisted) ahead
-        of the single-table cascade, which always answers."""
-        planned = self.planner.plan_llm(user_query)
-        if planned is None:
-            planned = star_planner.plan_star(user_query)
-            if planned is not None and set(planned.tables) - self.tables:
-                planned = None
-        if planned is None:
-            planned = self.planner.plan_cascade(user_query)
-        return planned
-
-    def _dataframe(self, planned):
+    def _dataframe(self, planned: Plan):
         """The planned query as a DataFrame: validated SQL through Catalyst,
         or a library operator for operator-routed star plans."""
-        if getattr(planned, "operator", None):
+        if planned.operator:
             # LSH near-dup, ANN: algorithms SQL cannot express scalably.
             # planned.sql holds the question's reference SQL semantics,
             # reported for transparency (and run as the differential
             # oracle by the parity suite). SQL validation does not apply —
             # no SQL executes; the operator reads only the plan's tables,
-            # which the allowlist gate in _plan checked.
+            # which the allowlist gate in Planner.plan checked.
             from .operators.nl import run_nl_operator
 
             return run_nl_operator(
@@ -350,7 +335,7 @@ class DataFabricEngine:
         if not user_query:
             return {"success": False, "error": "Query cannot be empty"}
         try:
-            planned = self._plan(user_query)
+            planned = self.planner.plan(user_query)
             df = self._dataframe(planned)
             physical = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -359,20 +344,11 @@ class DataFabricEngine:
                 "success": True,
                 "original_query": user_query,
                 "sql_query": planned.sql,
-                "branch": getattr(planned, "branch", None),
+                "branch": planned.branch,
                 "physical_plan": physical,
             }
         except Exception as exc:
             return {"success": False, "error": str(exc)}
-
-
-def _query_key(planned) -> tuple:
-    """The SQL-tier key: the planned SQL string, or an operator route's name
-    and args (its ``sql`` is only the reference text it reports)."""
-    operator = getattr(planned, "operator", None)
-    if operator:
-        return ("operator", operator, tuple(planned.operator_args))
-    return ("sql", planned.sql)
 
 
 #: The reference's canonical 15-question corpus (core/views.py:68-84) — the

@@ -11,13 +11,9 @@ applied to an iterative algorithm.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
-from ..cache import TTLCache
-from ..plans.costing import plan_size_estimate
-from ..sources.catalog import input_signature, signature_digest
+from ..plans.costing import column_within, plan_size_estimate
 from .registry import query
 
 #: Fixed damping (85/100) and rank scale (1e12 micro-units) — integers only.
@@ -471,74 +467,14 @@ def copurchase_pair_counts(lineitem=None, min_support: int = 1, baskets=None):
     return out
 
 
-#: Bound on the memoized :func:`_partkey_packable` verdicts (one entry
-#: per probed lineitem corpus).
-PACKABLE_CACHE_MAX_ENTRIES = 256
-
-#: Cache for :func:`_partkey_packable`, keyed on the digest of the source
-#: files' input signature (``catalog.input_signature``: path, size,
-#: mtime), NOT paths alone: a corpus regenerated in place at the
-#: same paths with partkeys >= 2^31 must re-probe, or a stale True
-#: verdict would re-enable the packed-key path and silently corrupt
-#: pairs — exactly the overflow hazard the guard exists to prevent.
-#: The footer probe is cheap (~ms) but bench passes re-run the query.
-#: Bounded and locked: operator routes run on concurrent HTTP threads.
-_PACKABLE_CACHE = TTLCache(math.inf, PACKABLE_CACHE_MAX_ENTRIES)
-
-
 def _partkey_packable(lineitem) -> bool:
     """True when every l_partkey fits in 31 bits, so a (src, dst) pair can
-    be packed into one non-negative long (src * 2^31 + dst).
-
-    Checked from parquet footer column statistics — a driver-side
-    metadata read, no Spark job (the bench layouts carry one row group
-    per file). Falls back to one single-column MAX job when any footer
-    lacks stats. At 100 TB TPC-H cardinality (~2e10 parts) this returns
-    False and the caller takes the struct-key rollup — the r06 verdict's
-    silent-corruption hazard, now a plan choice.
-    """
-    signature = input_signature(lineitem)
-    # Only file-backed frames are cacheable: an in-memory frame reports
-    # no input files, and an empty key would alias every such frame.
-    digest = None
-    if signature:
-        digest = signature_digest(signature)
-        cached = _PACKABLE_CACHE.get(digest)
-        if cached is not None:
-            return cached
-    ok = None
-    try:
-        import pyarrow.parquet as pq
-
-        if not signature:  # in-memory frame: nothing to probe, ask Spark
-            raise ValueError("no parquet inputs")
-        hi = 0
-        for path, _ in signature:
-            meta = pq.ParquetFile(path).metadata
-            idx = {
-                meta.schema.column(i).name: i for i in range(meta.num_columns)
-            }["l_partkey"]
-            for rg in range(meta.num_row_groups):
-                stats = meta.row_group(rg).column(idx).statistics
-                if stats is None or stats.max is None or stats.min is None:
-                    raise ValueError("missing parquet stats")
-                if stats.min < 0:
-                    hi = 1 << 62
-                hi = max(hi, int(stats.max))
-        ok = hi < (1 << 31)
-    except Exception:
-        row = lineitem.agg(
-            F.max("l_partkey").alias("mx"), F.min("l_partkey").alias("mn")
-        ).first()
-        ok = (
-            row["mx"] is not None
-            and row["mn"] is not None
-            and row["mn"] >= 0
-            and row["mx"] < (1 << 31)
-        )
-    if digest is not None:
-        _PACKABLE_CACHE.set(digest, ok)
-    return ok
+    be packed into one non-negative long (src * 2^31 + dst). Read from
+    parquet footer statistics (``costing.column_within``). At 100 TB TPC-H
+    cardinality (~2e10 parts) this returns False and the caller takes the
+    struct-key rollup — the r06 verdict's silent-corruption hazard, now a
+    plan choice."""
+    return column_within(lineitem, "l_partkey", 0, 1 << 31)
 
 
 def _lift_into_aqe_off_session(spark, df):

@@ -2,7 +2,8 @@
 language question through the star planner and executes the emitted SQL via
 ``spark.sql``; the oracle is the *same emitted string* run by DuckDB — so
 the NL->SQL->execution path itself is differentially verified end to end,
-not just the hand-written operators.
+not just the hand-written operators. An operator-routed plan runs its
+library operator instead, against the reference SQL it emits.
 
 (The single-table planner's branches are covered by golden tests on the
 synthesized employees fixture, tests/test_planner.py, since the oracle only
@@ -14,7 +15,14 @@ from __future__ import annotations
 from ..plans.star_planner import plan_star
 from .registry import query
 
-_NL_CASES = {
+#: Every NL route, in registration order: name -> (question, the planner
+#: branch it must take). The SQL routes come first, then the
+#: operator-routed cases (r09 verdict item 7), whose question routes to a
+#: library operator (LSH near-dup, cluster representatives, ANN top-k)
+#: while the planner emits the question's exact SQL meaning as the
+#: reference — the driver runs the Spark OPERATOR against that SQL on
+#: DuckDB, differentially verifying the whole NL->operator dispatch.
+_NL_ROUTES = {
     "nl_revenue_by_region": ("What is the revenue by region?", "revenue_by_region"),
     "nl_revenue_by_segment": ("Show revenue per market segment", "revenue_by_segment"),
     "nl_revenue_by_nation": ("What is the turnover per nation?", "revenue_by_nation"),
@@ -53,38 +61,7 @@ _NL_CASES = {
     "nl_events_by_hour": ("How many events per hour?", "events_by_hour"),
     "nl_events_by_type": ("Give me the event breakdown by type", "events_by_type"),
     "nl_most_active_users": ("Who are the 8 most active users?", "most_active_users"),
-}
-
-
-def run_nl_operator(spark, tables, operator: str, args: tuple = ()):
-    """Execute an operator-routed NL plan (StarPlan.operator) over an
-    already-registered view set — the engine's and the registry entries'
-    shared dispatch, so the NL->operator path has exactly one
-    implementation. The operator names are the planner's contract; each
-    resolves to a library operator body (the ``raw`` attribute the query
-    decorator preserves) or a parameterized kernel."""
-    from .dedup import dedup_cluster_representatives, dedup_minhash_lsh
-    from .similarity import bruteforce_topk
-
-    if operator == "dedup_minhash_lsh":
-        return dedup_minhash_lsh.raw(spark, tables)
-    if operator == "dedup_cluster_representatives":
-        return dedup_cluster_representatives.raw(spark, tables)
-    if operator == "similarity_topk":
-        return bruteforce_topk(tables, *args)
-    if operator == "streaming_profile":
-        from .streaming_entries import profile_stream_from_df
-
-        return profile_stream_from_df(spark, tables["events"])
-    raise KeyError(f"unknown NL operator route: {operator}")
-
-
-#: Operator-routed NL cases (r09 verdict item 7): the question routes to a
-#: library operator (LSH near-dup, cluster representatives, ANN top-k)
-#: while the planner emits the question's exact SQL meaning as the
-#: reference — the driver runs the Spark OPERATOR against that SQL on
-#: DuckDB, differentially verifying the whole NL->operator dispatch.
-_NL_OPERATOR_CASES = {
+    # operator routes
     "nl_docs_near_duplicates": (
         "Find near-duplicate document pairs",
         "docs_near_duplicates",
@@ -109,50 +86,50 @@ _NL_OPERATOR_CASES = {
 }
 
 
-def _register_operator_route(name: str, question: str, expected_branch: str) -> None:
-    planned = plan_star(question)
-    assert (
-        planned is not None
-        and planned.branch == expected_branch
-        and planned.operator is not None
-    ), f"{name}: planner produced {planned and planned.branch}"
-    op, args, sql = planned.operator, planned.operator_args, planned.sql
-    surface = (
-        "2.9 streaming/CDC" if op == "streaming_profile" else "dedup/similarity"
-    )
+def run_nl_operator(spark, tables, operator: str, args: tuple = ()):
+    """Execute an operator-routed NL plan (``Plan.operator``) over an
+    already-registered view set — the engine's and the registry entries'
+    shared dispatch, so the NL->operator path has exactly one
+    implementation. The operator names are the planner's contract; each
+    resolves to a library operator body (the ``raw`` attribute the query
+    decorator preserves) or a parameterized kernel. The operator modules
+    are imported here, not at the top: importing one registers its
+    entries, and the registry keeps registration order."""
+    from .dedup import dedup_cluster_representatives, dedup_minhash_lsh
+    from .similarity import bruteforce_topk
 
-    @query(
-        name,
-        oracle=sql,  # the emitted reference SQL — the question's exact meaning
-        covers=f"N1-N3 + {surface} NL routing: {expected_branch} "
-        f"-> operator {op} ({question!r})",
-    )
-    def _run(spark, t, _op=op, _args=args):
-        return run_nl_operator(spark, t, _op, _args)
+    if operator == "dedup_minhash_lsh":
+        return dedup_minhash_lsh.raw(spark, tables)
+    if operator == "dedup_cluster_representatives":
+        return dedup_cluster_representatives.raw(spark, tables)
+    if operator == "similarity_topk":
+        return bruteforce_topk(tables, *args)
+    if operator == "streaming_profile":
+        from .streaming_entries import profile_stream_from_df
 
-    _run.__name__ = f"query_{name}"
+        return profile_stream_from_df(spark, tables["events"])
+    raise KeyError(f"unknown NL operator route: {operator}")
 
 
 def _register(name: str, question: str, expected_branch: str) -> None:
+    """Register one NL route: the emitted SQL through ``spark.sql``, or the
+    plan's operator; either way the emitted SQL is the oracle — one
+    string, two engines."""
     planned = plan_star(question)
     assert planned is not None and planned.branch == expected_branch, (
         f"{name}: planner produced {planned and planned.branch}"
     )
-    sql = planned.sql
+    op, args, sql = planned.operator, planned.operator_args, planned.sql
+    if op:
+        surface = "2.9 streaming/CDC" if op == "streaming_profile" else "dedup/similarity"
+        covers = f"N1-N3 + {surface} NL routing: {expected_branch} -> operator {op}"
+        run = lambda spark, t: run_nl_operator(spark, t, op, args)  # noqa: E731
+    else:
+        covers = f"N1-N3 multi-table expansion: {expected_branch}"
+        run = lambda spark, t: spark.sql(sql)  # noqa: E731
+    run.__name__ = f"query_{name}"
+    query(name, oracle=sql, covers=f"{covers} ({question!r})")(run)
 
-    @query(
-        name,
-        oracle=sql,  # the emitted SQL *is* the oracle — one string, two engines
-        covers=f"N1-N3 multi-table expansion: {expected_branch} ({question!r})",
-    )
-    def _run(spark, t, _sql=sql):
-        return spark.sql(_sql)
 
-    _run.__name__ = f"query_{name}"
-
-
-for _name, (_question, _branch) in _NL_CASES.items():
+for _name, (_question, _branch) in _NL_ROUTES.items():
     _register(_name, _question, _branch)
-
-for _name, (_question, _branch) in _NL_OPERATOR_CASES.items():
-    _register_operator_route(_name, _question, _branch)

@@ -27,6 +27,7 @@ from ..plans.costing import (
     BCAST_BUILD_ROW_CAP,
     PROBE_SLACK,
     broadcast_threshold,
+    column_within,
     counted_probe,
     fits_broadcast_counted,
     parse_byte_conf,
@@ -259,7 +260,7 @@ def tpch_q5(spark, t):
             (j.l_suppkey == s_asia.s_suppkey)
             & (F.col("c_nationkey") == s_asia.s_nationkey),
         )
-    elif n_slice is not None and n_slice <= suppfirst_cap:
+    elif n_slice is not None and n_slice <= suppfirst_cap and _q5_key_packable(n, o, l):
         # Mid band (r13, sf30 audit): the slice outgrew the tight
         # orders-first gate, but a SUPPLIER-FIRST broadcast still beats
         # the shuffle form — the tiny ASIA-supplier probe cuts lineitem
@@ -276,9 +277,10 @@ def tpch_q5(spark, t):
         # compound key (l_orderkey, s_nationkey) == (o_orderkey,
         # c_nationkey) builds a generic UnsafeHashedRelation; packing
         # both into ONE long — orderkey * 32 + nationkey, injective
-        # because nationkey < 25 in this corpus's fixed 25-nation
-        # dimension — lets Spark build a LongHashedRelation (dense
-        # long-keyed, its fastest build+probe), and since no oc column
+        # while _q5_key_packable holds (a corpus that breaks it takes
+        # the compound-key shuffle form below) — lets Spark build a
+        # LongHashedRelation (dense long-keyed, its fastest
+        # build+probe), and since no oc column
         # survives the join (oc is unique per orderkey, so inner ==
         # semi in multiplicity, and the rollup groups on the supplier
         # side's s_nationkey) the probe is a payload-free semi.
@@ -312,6 +314,18 @@ def tpch_q5(spark, t):
     return per_nation.join(
         F.broadcast(asia_n), F.col("s_nationkey") == asia_n.n_nationkey
     ).select("n_name", (F.col("rev_micro_total") / F.lit(1e6)).alias("revenue"))
+
+
+def _q5_key_packable(n, o, l) -> bool:
+    """Whether the mid band's packed key ``orderkey * 32 + nationkey`` is
+    injective: every nation key in [0, 32) (both packed nation keys are
+    ASIA nation keys) and every order key in [0, 2^58), so the product
+    cannot overflow. Footer statistics, memoized per corpus."""
+    return (
+        column_within(n, "n_nationkey", 0, 32)
+        and column_within(o, "o_orderkey", 0, 1 << 58)
+        and column_within(l, "l_orderkey", 0, 1 << 58)
+    )
 
 
 #: Ceiling on Q5's mid-band supplier-first broadcast of the qualifying

@@ -1,10 +1,13 @@
 """Broadcast-vs-shuffle cost gates: the one place an operator asks whether
-a relation is small enough to broadcast.
+a relation is small enough to broadcast, or whether a column's values fit
+a packed key.
 
 Every gate reads the session broadcast threshold and Catalyst's pre-AQE
 size estimate of the optimized plan. :func:`fits_broadcast_counted` adds a
 runtime statistic for the borderline band: one memoized ``COUNT`` of the
 slice, keyed on the plan and on the signature of the files it reads.
+:func:`column_within` reads a column's range from parquet footers, keyed
+the same way.
 """
 
 from __future__ import annotations
@@ -14,11 +17,17 @@ import math
 import re
 import warnings
 
+from pyspark.sql import functions as F
+
 from ..cache import TTLCache
-from ..sources.catalog import input_digest
+from ..sources.catalog import input_digest, input_signature, signature_digest
 
 #: Bound on the memoized COUNT probes (one entry per probed slice).
 PROBE_CACHE_MAX_ENTRIES = 1024
+
+#: Bound on the memoized column ranges (one entry per probed column of a
+#: corpus).
+RANGE_CACHE_MAX_ENTRIES = 256
 
 _UNITS = {
     "tb": 1 << 40, "t": 1 << 40,
@@ -168,3 +177,49 @@ def counted_probe(df, plan, est: int) -> int:
         n = df.count()
         _PROBE_COUNT_CACHE.set(key, n)
     return n
+
+
+#: Memoized :func:`column_within` verdicts, keyed on the column, the range
+#: and the digest of the source files' input signature (path, size,
+#: mtime), NOT paths alone: a corpus regenerated in place at the same paths
+#: with wider keys must re-probe, or a stale verdict would re-enable a
+#: packed key and silently corrupt results — exactly the overflow hazard
+#: the guards exist to prevent. The footer probe is cheap (~ms) but bench
+#: passes re-run the query. Bounded and locked: operator routes run on
+#: concurrent HTTP threads.
+RANGE_CACHE = TTLCache(math.inf, RANGE_CACHE_MAX_ENTRIES)
+
+
+def column_within(df, column: str, lo: int, hi: int) -> bool:
+    """True when every value of the integer ``column`` of ``df`` lies in
+    ``[lo, hi)`` (vacuously when it holds none): the guard of a packed key,
+    whose caller takes its unpacked form otherwise.
+
+    Read from parquet footer column statistics — a driver-side metadata
+    read, no Spark job (the bench layouts carry one row group per file).
+    Falls back to one MIN/MAX job when a footer lacks stats or ``df``
+    reads no files."""
+    signature = input_signature(df)
+    # Only file-backed frames are cacheable: an in-memory frame reports
+    # no input files, and an empty key would alias every such frame.
+    key = (signature_digest(signature), column, lo, hi) if signature else None
+    cached = RANGE_CACHE.get(key) if key else None
+    if cached is not None:
+        return cached
+    try:
+        import pyarrow.parquet as pq
+
+        stats = []
+        for path, _ in signature:
+            meta = pq.ParquetFile(path).metadata
+            idx = meta.schema.names.index(column)
+            stats += [meta.row_group(i).column(idx).statistics for i in range(meta.num_row_groups)]
+        if not signature or any(s is None or s.min is None or s.max is None for s in stats):
+            raise ValueError("no footer statistics")  # ask Spark
+        ok = all(lo <= int(s.min) and int(s.max) < hi for s in stats)
+    except Exception:
+        row = df.agg(F.min(column).alias("lo"), F.max(column).alias("hi")).first()
+        ok = row["lo"] is None or (lo <= row["lo"] and row["hi"] < hi)
+    if key is not None:
+        RANGE_CACHE.set(key, ok)
+    return ok

@@ -1,6 +1,8 @@
 """Deterministic NL->SQL planner — a rule-for-rule port of the reference's
 fallback generator (``core/ai_query_generator.py:178-281``), emitting
-Spark-SQL-compatible text.
+Spark-SQL-compatible text — and NL plan selection: :class:`Plan` is the one
+planned-query type every planner returns, and :meth:`Planner.plan` tries
+the LLM provider, the star rules and this cascade in that order.
 
 This *is* the reference's actual engine: six keyword intent detectors (N1,
 ``:183-188``), intent-driven column selection (N2, ``:190-214``), and an
@@ -64,11 +66,40 @@ class Intent:
 
 
 @dataclass
-class PlannedQuery:
+class Plan:
+    """One planned question, whichever planner produced it."""
+
     sql: str
+    #: the rule that answered (``llm`` for the LLM path)
     branch: str
-    intent: Intent
-    table: str = "employees"
+    #: the views it reads; empty for an LLM plan, whose tables only
+    #: validation knows
+    tables: tuple[str, ...]
+    #: When set, the plan routes to a library OPERATOR instead of executing
+    #: ``sql`` — for questions whose Spark-side answer is an algorithm SQL
+    #: cannot express scalably (MinHash+LSH near-dup, ANN). ``sql`` then
+    #: holds the REFERENCE semantics of the question (the quadratic ground
+    #: truth, DuckDB-runnable), which is what the engine reports for
+    #: transparency and what the driver gate runs as the oracle — so the
+    #: NL->operator dispatch is differentially verified against the exact
+    #: SQL meaning of the question, the strongest contract available for a
+    #: non-SQL route. Dispatch lives in operators/nl.py::run_nl_operator.
+    operator: str | None = None
+    operator_args: tuple = ()
+
+    @property
+    def key(self) -> tuple:
+        """The engine's SQL-tier cache key: the SQL string, or an operator
+        route's name and args (its ``sql`` is only the reference text it
+        reports)."""
+        if self.operator:
+            return ("operator", self.operator, tuple(self.operator_args))
+        return ("sql", self.sql)
+
+
+# After Plan: star_planner builds Plans. Planner.plan calls star rules
+# through this module attribute, so a wrapper patched onto it is seen.
+from . import star_planner  # noqa: E402
 
 
 def _select_clause(intent: Intent, query_lower: str) -> str:
@@ -92,7 +123,7 @@ def _select_clause(intent: Intent, query_lower: str) -> str:
     return ", ".join(columns)
 
 
-def plan(user_query: str, table: str = "employees") -> PlannedQuery:
+def plan(user_query: str, table: str = "employees") -> Plan:
     """N3 — the ordered rule cascade (``:216-281``), emitting Spark SQL.
 
     Branch order is semantic: count -> list-all -> department -> salary ->
@@ -102,7 +133,7 @@ def plan(user_query: str, table: str = "employees") -> PlannedQuery:
     query_lower = user_query.lower()
     intent = Intent.detect(query_lower)
     select_clause = _select_clause(intent, query_lower)
-    mk = lambda sql, branch: PlannedQuery(sql=sql, branch=branch, intent=intent, table=table)
+    mk = lambda sql, branch: Plan(sql=sql, branch=branch, tables=(table,))
 
     # --- count branches (:217-226)
     if intent.count:
@@ -210,15 +241,28 @@ LLMProvider = Callable[[str, str], "str | None"]
 
 @dataclass
 class Planner:
-    """The single-table planning paths: the optional LLM provider and the
-    deterministic cascade. ``DataFabricEngine._plan`` orders them (mirrors
-    ``:379-393``), with the star rules in between."""
+    """NL plan selection: the optional LLM provider, the star rules and
+    the deterministic cascade, tried in that order by :meth:`plan`."""
 
+    #: the engine's allowlist; star rules answer only over these views
+    tables: frozenset[str]
     table: str = "employees"
     llm_provider: LLMProvider | None = None
     schema_text: str = field(default="")
 
-    def plan_llm(self, user_query: str) -> "PlannedQuery | None":
+    def plan(self, user_query: str) -> Plan:
+        """Precedence mirrors the reference lifecycle (:379-393): the
+        configured LLM path first, then deterministic rules — star rules
+        (multi-table, inert unless all their tables are allowlisted) ahead
+        of the single-table cascade, which always answers."""
+        planned = self.plan_llm(user_query)
+        if planned is None:
+            planned = star_planner.plan_star(user_query)
+            if planned is None or not self.tables.issuperset(planned.tables):
+                planned = self.plan_cascade(user_query)
+        return planned
+
+    def plan_llm(self, user_query: str) -> Plan | None:
         """The N4 path alone: None when no provider is configured or it
         returns nothing (caller falls through to star rules / cascade)."""
         if self.llm_provider is None:
@@ -226,14 +270,8 @@ class Planner:
         generated = self.llm_provider(user_query, self.schema_text)
         if not generated:
             return None
-        intent = Intent.detect(user_query.lower())
-        return PlannedQuery(
-            sql=generated.strip().rstrip(";"),
-            branch="llm",
-            intent=intent,
-            table=self.table,
-        )
+        return Plan(sql=generated.strip().rstrip(";"), branch="llm", tables=())
 
-    def plan_cascade(self, user_query: str) -> PlannedQuery:
+    def plan_cascade(self, user_query: str) -> Plan:
         """The deterministic N3 cascade alone."""
         return plan(user_query, table=self.table)

@@ -13,7 +13,8 @@ verified, not just the hand-written operator library.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+
+from .planner import Plan
 
 #: The one revenue expression, shared by every rule that aggregates money —
 #: order-independent (see functions/numerics.py).
@@ -63,24 +64,6 @@ PORTABLE_QUALITY = (
 QUALITY_FLOOR = 0.8
 
 
-@dataclass
-class StarPlan:
-    sql: str
-    branch: str
-    tables: tuple[str, ...]
-    #: When set, the plan routes to a library OPERATOR instead of executing
-    #: ``sql`` — for questions whose Spark-side answer is an algorithm SQL
-    #: cannot express scalably (MinHash+LSH near-dup, ANN). ``sql`` then
-    #: holds the REFERENCE semantics of the question (the quadratic ground
-    #: truth, DuckDB-runnable), which is what the engine reports for
-    #: transparency and what the driver gate runs as the oracle — so the
-    #: NL->operator dispatch is differentially verified against the exact
-    #: SQL meaning of the question, the strongest contract available for a
-    #: non-SQL route. Dispatch lives in operators/nl.py::run_nl_operator.
-    operator: str | None = None
-    operator_args: tuple = ()
-
-
 def _first_int(text: str, default: int) -> int:
     m = re.findall(r"\d+", text)
     return int(m[0]) if m else default
@@ -92,7 +75,7 @@ def _has_word(q: str, word: str) -> bool:
     return re.search(rf"\b{re.escape(word)}s?\b", q) is not None
 
 
-def plan_star(question: str) -> StarPlan | None:
+def plan_star(question: str) -> Plan | None:
     """Ordered rule cascade for star-schema questions. Returns None when no
     rule fires (callers fall back to the single-table planner / default)."""
     q = question.lower()
@@ -105,7 +88,7 @@ def plan_star(question: str) -> StarPlan | None:
     # revenue by region / nation / segment --------------------------------
     if has("revenue", "sales volume", "turnover"):
         if has("region"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT r.r_name AS region, "
                     f"{REVENUE} AS revenue "
@@ -120,7 +103,7 @@ def plan_star(question: str) -> StarPlan | None:
                 tables=("lineitem", "orders", "customer", "nation", "region"),
             )
         if has("nation", "country"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT n.n_name AS nation, "
                     f"{REVENUE} AS revenue "
@@ -134,7 +117,7 @@ def plan_star(question: str) -> StarPlan | None:
                 tables=("lineitem", "orders", "customer", "nation"),
             )
         if has("segment", "market"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT c.c_mktsegment AS segment, "
                     f"{REVENUE} AS revenue "
@@ -150,7 +133,7 @@ def plan_star(question: str) -> StarPlan | None:
     # top-N customers by spending -----------------------------------------
     if has("top", "best", "biggest") and has("customer"):
         k = _first_int(q, 10)
-        return StarPlan(
+        return Plan(
             sql=(
                 "SELECT c.c_custkey, c.c_name, "
                 "CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_spent "
@@ -164,7 +147,7 @@ def plan_star(question: str) -> StarPlan | None:
 
     # orders over time ----------------------------------------------------
     if has("order") and has("per year", "by year", "each year", "yearly"):
-        return StarPlan(
+        return Plan(
             sql=(
                 "SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS year, "
                 "COUNT(*) AS n_orders "
@@ -177,7 +160,7 @@ def plan_star(question: str) -> StarPlan | None:
     # average order value -------------------------------------------------
     if has("average", "avg") and has("order"):
         if has("segment", "market"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT c.c_mktsegment AS segment, "
                     "CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE)"
@@ -188,7 +171,7 @@ def plan_star(question: str) -> StarPlan | None:
                 branch="avg_order_value_by_segment",
                 tables=("orders", "customer"),
             )
-        return StarPlan(
+        return Plan(
             sql=(
                 "SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)"
                 " / COUNT(o_totalprice) AS avg_order_value FROM orders"
@@ -207,7 +190,7 @@ def plan_star(question: str) -> StarPlan | None:
             ("lineitem", "line item"),
         ]:
             if _has_word(q, word):
-                return StarPlan(
+                return Plan(
                     sql=f"SELECT COUNT(*) AS count FROM {table}",
                     branch=f"count_{table}",
                     tables=(table,),
@@ -221,12 +204,12 @@ def plan_star(question: str) -> StarPlan | None:
         # operators (LSH, components, ANN); the emitted reference SQL is
         # the operator's REGISTERED oracle string verbatim (imported from
         # the registry, so planner and oracle can never drift), see
-        # StarPlan.operator.
+        # Plan.operator.
         from ..operators import dedup  # noqa: F401  (registers its entries)
         from ..operators.registry import REGISTRY as _REG
 
         if has("near-duplicate", "near duplicate", "near-dup", "near dup"):
-            return StarPlan(
+            return Plan(
                 sql=_REG["dedup_minhash_lsh"].oracle,
                 branch="docs_near_duplicates",
                 tables=("documents",),
@@ -236,7 +219,7 @@ def plan_star(question: str) -> StarPlan | None:
             m = re.search(r"(?:document|doc|vector)\s+(\d+)", q)
             qid = int(m.group(1)) if m else 0
             k = _first_int(re.sub(r"(?:document|doc|vector)\s+\d+", "", q), 10)
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT vec_id, label, "
                     "LIST_COSINE_SIMILARITY(embedding::DOUBLE[], "
@@ -253,7 +236,7 @@ def plan_star(question: str) -> StarPlan | None:
         if has("duplicate", "dedup") and has(
             "keep", "best", "survivor", "representative", "canonical"
         ):
-            return StarPlan(
+            return Plan(
                 sql=_REG["dedup_cluster_representatives"].oracle,
                 branch="docs_dedup_survivors",
                 tables=("documents",),
@@ -264,7 +247,7 @@ def plan_star(question: str) -> StarPlan | None:
         # otherwise claim
         if has("quality"):
             group = "lang" if has("language") else "source"
-            return StarPlan(
+            return Plan(
                 sql=(
                     f"SELECT {group}, COUNT(*) AS n_docs, "
                     f"CAST(SUM(CASE WHEN {PORTABLE_QUALITY} >= {QUALITY_FLOOR} "
@@ -275,7 +258,7 @@ def plan_star(question: str) -> StarPlan | None:
                 tables=("documents",),
             )
         if has("duplicate", "dedup"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT source, COUNT(*) AS n_docs, "
                     "CAST(COUNT(*) - COUNT(DISTINCT MD5(LOWER(text))) "
@@ -286,7 +269,7 @@ def plan_star(question: str) -> StarPlan | None:
                 tables=("documents",),
             )
         if has("average", "avg") and has("token", "length", "long are"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT source, COUNT(*) AS n_docs, "
                     f"CAST(SUM(CAST({PORTABLE_TOKENS} AS DECIMAL(18,6))) "
@@ -297,7 +280,7 @@ def plan_star(question: str) -> StarPlan | None:
                 tables=("documents",),
             )
         if has("per language", "by language", "each language"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT lang, COUNT(*) AS n_docs, "
                     "CAST(SUM(CAST(n_chars AS DECIMAL(18,6))) AS DOUBLE)"
@@ -309,7 +292,7 @@ def plan_star(question: str) -> StarPlan | None:
             )
         if has("longest", "largest", "biggest"):
             k = _first_int(q, 10)
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT doc_id, lang, n_chars FROM documents "
                     f"ORDER BY n_chars DESC, doc_id LIMIT {k}"
@@ -318,7 +301,7 @@ def plan_star(question: str) -> StarPlan | None:
                 tables=("documents",),
             )
         if has("how many", "count", "number of"):
-            return StarPlan(
+            return Plan(
                 sql="SELECT COUNT(*) AS count FROM documents",
                 branch="count_documents",
                 tables=("documents",),
@@ -339,14 +322,14 @@ def plan_star(question: str) -> StarPlan | None:
             from ..operators import streaming_entries  # noqa: F401 (registers)
             from ..operators.registry import REGISTRY as _SREG
 
-            return StarPlan(
+            return Plan(
                 sql=_SREG["streaming_cdc_upsert_bucketed"].oracle,
                 branch="users_live_profile",
                 tables=("events",),
                 operator="streaming_profile",
             )
         if has("per hour", "by hour", "hourly"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT DATE_TRUNC('hour', ts) AS hour, COUNT(*) AS n_events "
                     "FROM events GROUP BY DATE_TRUNC('hour', ts)"
@@ -355,7 +338,7 @@ def plan_star(question: str) -> StarPlan | None:
                 tables=("events",),
             )
         if has("per type", "by type", "each type", "breakdown"):
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT event_type, COUNT(*) AS n_events "
                     "FROM events GROUP BY event_type"
@@ -365,7 +348,7 @@ def plan_star(question: str) -> StarPlan | None:
             )
         if has("most active", "top user"):
             k = _first_int(q, 10)
-            return StarPlan(
+            return Plan(
                 sql=(
                     "SELECT user_id, COUNT(*) AS n_events FROM events "
                     f"GROUP BY user_id ORDER BY n_events DESC, user_id LIMIT {k}"
@@ -376,7 +359,7 @@ def plan_star(question: str) -> StarPlan | None:
 
     # customers without orders (anti-join shape) --------------------------
     if has("customer") and has("without", "no orders", "never ordered"):
-        return StarPlan(
+        return Plan(
             sql=(
                 "SELECT c_custkey, c_name FROM customer c "
                 "WHERE NOT EXISTS (SELECT 1 FROM orders o "

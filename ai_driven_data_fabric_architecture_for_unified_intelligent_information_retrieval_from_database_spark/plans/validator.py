@@ -157,8 +157,10 @@ class _PlanWalk:
     """One pass over a parsed plan's JSON: checks every node's class and
     every relation, and counts the nodes it visited."""
 
-    def __init__(self, allowed: set[str]):
-        self.allowed = allowed
+    def __init__(self, allowed: set[str], sql: str | None):
+        #: each allowlist entry as the parts its dots separate
+        self.allowed = {tuple(name.split(".")) for name in allowed}
+        self.sql = sql
         self.tables: set[str] = set()
         self.visited = 0
         self.saw_cte = False
@@ -198,14 +200,18 @@ class _PlanWalk:
         # Matching only the last part would let `db.employees` or
         # parquet.`/x` impersonate an allowlisted `employees`, so a
         # multipart name must be allowlisted in full, and a single-part
-        # name must be a plain identifier (as every CTE name is). The
-        # string is ambiguous only for a quoted part holding ", ", which
-        # then reads as more parts and needs a full allowlist match.
+        # name must be a plain identifier (as every CTE name is). Parts
+        # are compared, not dotted names: a quoted `a.b` is one part. The
+        # printed string is ambiguous for a quoted part holding ", ": the
+        # one part `a, b` prints like a.b.
         if not (ident.startswith("[") and ident.endswith("]")):
             raise SqlValidationError(f"unrecognized relation name: {ident!r}")
-        parts = ident[1:-1].lower().split(", ")
+        printed = ident[1:-1].split(", ")
+        parts = tuple(p.lower() for p in printed)
         full = ".".join(parts)
-        if full in self.allowed:
+        if parts in self.allowed:
+            if len(parts) > 1 and self.may_join(printed):
+                raise SqlValidationError(f"ambiguous multipart relation name: {ident!r}")
             self.tables.add(full)
         elif len(parts) > 1:
             raise SqlValidationError(f"multipart relation name not allowlisted: {full!r}")
@@ -214,14 +220,32 @@ class _PlanWalk:
         elif full not in scope:
             raise SqlValidationError(f"references a non-allowlisted table: {full!r}")
 
+    def may_join(self, printed: list[str]) -> bool:
+        """Whether two adjacent printed parts may be one quoted part. Such a
+        part is written as an opening quote (a backtick, or a double quote
+        under ANSI identifiers) and its text with that quote doubled, so
+        the SQL text holds the quote and the pair joined by ", " exactly.
+        Without the text, fail closed."""
+        if self.sql is None:
+            return True
+        return any(
+            q + f"{a}, {b}".replace(q, q + q) in self.sql
+            for q in '`"' for a, b in zip(printed, printed[1:])
+        )
+
 
 def _plan_tables(
-    spark: SparkSession, plan_json: str, allowed_tables: set[str] | frozenset[str]
+    spark: SparkSession,
+    plan_json: str,
+    allowed_tables: set[str] | frozenset[str],
+    sql: str | None = None,
 ) -> set[str]:
     """The allowlisted tables a parsed plan's JSON reads; raises
-    :class:`SqlValidationError` unless the walk admits every node."""
+    :class:`SqlValidationError` unless the walk admits every node. ``sql``
+    is the parsed text: without it a multipart name never matches a dotted
+    allowlist entry."""
     objects: list[dict] = []  # every JSON object, in any position
-    walk = _PlanWalk({t.lower() for t in allowed_tables})
+    walk = _PlanWalk({t.lower() for t in allowed_tables}, sql)
     try:
         tree = json.loads(plan_json, object_hook=lambda o: objects.append(o) or o)
         walk.plan(tree, frozenset())
@@ -261,4 +285,4 @@ def validate_select(
         plan_json = spark._jsparkSession.sessionState().sqlParser().parsePlan(cleaned).toJSON()
     except Exception as exc:  # parse failure
         raise SqlValidationError(f"SQL does not parse: {exc}") from exc
-    return ValidatedSql(sql=cleaned, tables=_plan_tables(spark, plan_json, allowed_tables))
+    return ValidatedSql(sql=cleaned, tables=_plan_tables(spark, plan_json, allowed_tables, cleaned))

@@ -23,6 +23,13 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "data-fabric-spark"
 
 
+def local_cores(default: int | None = None) -> int:
+    """The core count a local session is sized for: ``$SPARK_GRAFT_CPUS``,
+    else ``default``, else the host's. The one read of that variable; a
+    value that is not an integer (``*`` included) raises."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or default or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -31,15 +38,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster callers pass ``None`` with a pre-set master or use
-    ``spark-submit``.
+    ``master`` defaults to ``local[local_cores(32)]`` and the shuffle
+    partitions to :func:`local_cores`; on a real cluster callers pass
+    ``None`` with a pre-set master or use ``spark-submit``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
-        master = f"local[{cpus}]"
+        # More threads than cores on purpose: on a 4-core host bench.py's
+        # join cells (q4, q8, q13, bucketed_join_revenue) ran 15-30% slower
+        # on local[4] than on local[32] (3 alternating pairs at sf0.1).
+        master = f"local[{local_cores(32)}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = local_cores()
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], local[32] when it is unset
+(``session.get_spark``).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -20,12 +21,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark import (
-    get_spark,
-)
 from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators.registry import (
     PHASE_SPLITS as _phase_splits,
     queries,
+)
+from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.session import (
+    get_spark,
+    local_cores,
+)
+from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.sources.catalog import (
+    STAR_TABLES,
 )
 
 #: Representative operator mix: scan-agg, selective joins, star join,
@@ -394,13 +399,7 @@ def bench_conf(sf_dir: str) -> dict[str, str]:
         # real compute in some runs.
         # Default tracks the actual host core count so "one partition
         # per core" holds everywhere; SPARK_GRAFT_CPUS overrides.
-        "spark.sql.shuffle.partitions": (
-            "8"
-            if small
-            else str(
-                int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32)))
-            )
-        ),
+        "spark.sql.shuffle.partitions": "8" if small else str(local_cores()),
         # AQE's value is runtime re-planning of LARGE shuffles
         # (coalescing, skew splitting, broadcast demotion); at sf0.1
         # every join already broadcasts and the only thing AQE adds is
@@ -682,10 +681,7 @@ def main() -> None:
 
         con = duckdb.connect()
         con.execute("SET timezone='UTC'")
-        for tname in (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ):
+        for tname in STAR_TABLES:
             p = os.path.join(sf_dir, f"{tname}.parquet")
             if os.path.isdir(p):
                 con.execute(

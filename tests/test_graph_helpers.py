@@ -153,12 +153,12 @@ def test_packable_cache_is_bounded(spark, tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.operators import (
-        graph,
+    from ai_driven_data_fabric_architecture_for_unified_intelligent_information_retrieval_from_database_spark.plans import (
+        costing,
     )
 
-    graph._PACKABLE_CACHE.clear()
-    monkeypatch.setattr(graph._PACKABLE_CACHE, "max_entries", 2)
+    costing.RANGE_CACHE.clear()
+    monkeypatch.setattr(costing.RANGE_CACHE, "max_entries", 2)
     calls = {"n": 0}
     orig_file = pq.ParquetFile
 
@@ -174,10 +174,10 @@ def test_packable_cache_is_bounded(spark, tmp_path, monkeypatch):
         corpora[i] = spark.read.parquet(path)
 
     assert all(_partkey_packable(corpora[i]) for i in range(3))
-    assert calls["n"] == 3 and len(graph._PACKABLE_CACHE) == 2
+    assert calls["n"] == 3 and len(costing.RANGE_CACHE) == 2
     assert _partkey_packable(corpora[0]) is True
     assert calls["n"] == 4, "an evicted corpus must be probed again"
-    graph._PACKABLE_CACHE.clear()
+    costing.RANGE_CACHE.clear()
 
 
 def test_copurchase_pair_counts_matches_plain_rollup(spark):

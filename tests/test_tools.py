@@ -117,6 +117,24 @@ def test_package_reads_only_deployment_settings_from_env():
     assert computed == {"plans/llm_provider.py"}
 
 
+def test_core_count_is_read_in_one_place():
+    """``session.local_cores`` is the one read of SPARK_GRAFT_CPUS, so the
+    package, ``bench.py`` and ``tools/`` share one default core count."""
+    paths = [os.path.join(ROOT, "bench.py")]
+    paths += [os.path.join(TOOLS, n) for n in _entries() if n.endswith(".py")]
+    paths += [os.path.join(d, n) for d, _, names in os.walk(PACKAGE)
+              for n in names if n.endswith(".py")]
+    reads = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            arg = _env_read_name(node)
+            if isinstance(arg, ast.Constant) and arg.value == "SPARK_GRAFT_CPUS":
+                reads.append(os.path.relpath(path, PACKAGE))
+    assert reads == ["session.py"], reads
+
+
 def test_tools_stay_few():
     assert len(_entries()) <= 6, _entries()
 

@@ -191,6 +191,49 @@ def test_fully_qualified_allowlist_entry_passes(spark):
     assert v.tables == {"warehouse.employees"}
 
 
+@pytest.mark.parametrize("sql,allowed", [
+    ("SELECT * FROM `warehouse, employees`", "warehouse.employees"),
+    ("SELECT * FROM `Warehouse, Employees`", "warehouse.employees"),
+    ("SELECT * FROM `a, b`.c", "a.b.c"),
+    ("SELECT * FROM a.`b, c`", "a.b.c"),
+    ("SELECT * FROM `a``x, b`", "a`x.b"),
+    ("SELECT * FROM `warehouse.employees`", "warehouse.employees"),
+    ("SELECT * FROM `a.b`.c", "a.b.c"),
+])
+def test_quoted_part_is_not_a_dotted_entry(spark, sql, allowed):
+    """Spark prints the one part `warehouse, employees` exactly like the
+    two parts warehouse.employees ("[warehouse, employees]"), and a quoted
+    part may hold a dot: a dotted allowlist entry admits only its own
+    parts, never a view whose quoted name prints like them."""
+    with pytest.raises(SqlValidationError, match="ambiguous|plain identifier|multipart"):
+        validate_select(spark, sql, {allowed})
+
+
+def test_comma_in_other_quoted_names_keeps_dotted_entry(spark):
+    v = validate_select(
+        spark,
+        "SELECT name AS `x, y` FROM warehouse.employees AS `e, f`",
+        {"warehouse.employees"},
+    )
+    assert v.tables == {"warehouse.employees"}
+
+
+def test_columns_named_like_the_parts_keep_dotted_entry(spark):
+    v = validate_select(
+        spark, "SELECT warehouse, employees FROM warehouse.employees", {"warehouse.employees"}
+    )
+    assert v.tables == {"warehouse.employees"}
+
+
+def test_dotted_entry_without_sql_text_fails_closed(spark):
+    """Only the SQL text tells the two parts warehouse.employees from the
+    one part `warehouse, employees`; a walk given no text admits neither."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    plan_json = parser.parsePlan("SELECT * FROM warehouse.employees").toJSON()
+    with pytest.raises(SqlValidationError, match="ambiguous"):
+        _plan_tables(spark, plan_json, {"warehouse.employees"})
+
+
 def test_backquoted_non_identifier_rejected(spark):
     with pytest.raises(SqlValidationError):
         validate_select(spark, "SELECT * FROM `emp loyees`", ALLOWED)
